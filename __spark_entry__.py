@@ -49,7 +49,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Seed a frontier from sf0.001 orders (one URL per order, hosts from
     custkeys), run the full politeness-ordered drain for a few virtual-
     clock rounds, and return the emitted schedule (SURVEY §3.1)."""
-    from gigaspark.operators.frontier import CrawlConfig, CrawlScheduler
+    from gigaspark.operators.frontier import CrawlScheduler
 
     sf_dir = "/root/testdata/sf0.001"
     orders = _t(spark, sf_dir, "orders")
@@ -74,7 +74,7 @@ def entry(spark: SparkSession) -> DataFrame:
         "link_graph": spark.createDataFrame(
             [], "src_url string, dst_urls array<string>"),
     }
-    sched = CrawlScheduler(spark, fixtures, CrawlConfig(use_bloom=True))
+    sched = CrawlScheduler(spark, fixtures)
     sched.seed(seeds)
     for _ in range(3):
         if sched.run_round() == 0:
@@ -5912,7 +5912,7 @@ def q_crawl_round(spark, sf_dir):
     reaches the (DuckDB-inexpressible) xxhash64 tie-break columns, which
     are projected out of the result.  The multi-round loop is separately
     golden-tested in tests/test_frontier.py."""
-    from gigaspark.operators.frontier import CrawlConfig, CrawlScheduler
+    from gigaspark.operators.frontier import CrawlScheduler
 
     orders = _t(spark, sf_dir, "orders")
     seeds = orders.select(
@@ -5933,7 +5933,7 @@ def q_crawl_round(spark, sf_dir):
             " crawl_delay_ms long"),
         "link_graph": spark.createDataFrame([], "src_url string, dst_urls array<string>"),
     }
-    sched = CrawlScheduler(spark, fixtures, CrawlConfig(use_bloom=True))
+    sched = CrawlScheduler(spark, fixtures)
     sched.seed(seeds)
     sched.run_round()
     return sched.emitted_df().select(
@@ -5978,7 +5978,7 @@ def q_crawl_dedup_round(spark, sf_dir):
     globally unique so no ordering tie reaches the xxhash64 tie-break,
     and the within-round dup window is plain SQL (row_number per hash
     over emission order)."""
-    from gigaspark.operators.frontier import CrawlConfig, CrawlScheduler
+    from gigaspark.operators.frontier import CrawlScheduler
 
     orders = _t(spark, sf_dir, "orders")
     seeds = orders.select(
@@ -6001,7 +6001,7 @@ def q_crawl_dedup_round(spark, sf_dir):
         "content_map": seeds.select(
             "url", (F.col("added_time_ms") % 997).cast("long").alias("content_hash")),
     }
-    sched = CrawlScheduler(spark, fixtures, CrawlConfig(use_bloom=True))
+    sched = CrawlScheduler(spark, fixtures)
     sched.seed(seeds)
     sched.run_round()
     owners = sched.indexed_ch.select(F.col("owner").alias("urlhash48"),

@@ -49,7 +49,7 @@ HEADLINE = [
 def bench_crawl(spark, sf_dir: str) -> tuple[float, int]:
     """One full frontier round over all orders-derived URLs; returns
     (seconds, urls_scheduled)."""
-    from gigaspark.operators.frontier import CrawlConfig, CrawlScheduler
+    from gigaspark.operators.frontier import CrawlScheduler
 
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     seeds = orders.select(
@@ -72,7 +72,7 @@ def bench_crawl(spark, sf_dir: str) -> tuple[float, int]:
         "link_graph": spark.createDataFrame([], "src_url string, dst_urls array<string>"),
     }
     t0 = time.time()
-    sched = CrawlScheduler(spark, fixtures, CrawlConfig(use_bloom=True))
+    sched = CrawlScheduler(spark, fixtures)
     sched.seed(seeds)
     n = 0
     for _ in range(2):

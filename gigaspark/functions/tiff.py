@@ -92,7 +92,10 @@ def decode_tiff(data: bytes) -> np.ndarray:
         total = size * cnt
         buf = raw[:total] if total <= 4 else data[
             struct.unpack(e + "I", raw)[0]:][:total]
-        return list(struct.unpack(e + code * cnt, buf))
+        # a corrupt count must fail here, not size an allocation
+        if len(buf) != total:
+            raise ValueError(f"TIFF tag {tag} runs past the file")
+        return list(struct.unpack(f"{e}{cnt}{code}", buf))
 
     w, h = values(_WIDTH)[0], values(_HEIGHT)[0]
     spp = values(_SPP, [3])[0]

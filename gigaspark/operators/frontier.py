@@ -34,9 +34,8 @@ no ``collect()`` of data rows.
 
 from __future__ import annotations
 
-import os
-import time
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
 from pyspark.sql import types as T
@@ -48,15 +47,6 @@ from gigaspark.operators import robots as robots_op
 from gigaspark.operators import urlseen
 from gigaspark.operators.url_filters import ASSIGN_FIELDS, Rule, apply_url_filters, rules_from_rows
 from gigaspark.functions.urls import host_col, path_col, with_url_columns
-
-_TIMING = bool(os.environ.get("GIGASPARK_TIMING"))
-
-
-def _tlog(label: str, t0: float) -> float:
-    """Per-phase wall-time tracer, enabled by $GIGASPARK_TIMING."""
-    if _TIMING:
-        print(f"    [{label}] {time.time() - t0:.2f}s", flush=True)
-    return time.time()
 
 FETCH_MS = 100
 MS_PER_DAY = 86_400_000
@@ -89,6 +79,12 @@ ENQUEUE_SCHEMA = T.StructType([
 EMIT_COLS = ["round", "scheduled_time_ms", "priority", "added_ms", "urlhash48",
              "url", "firstip", "hopcount", "host"]
 
+
+def _union(parts: list[DataFrame]) -> DataFrame:
+    """Lazy union of same-schema LSM parts (non-empty list)."""
+    return reduce(lambda a, b: a.unionByName(b), parts)
+
+
 def _win_order():
     # building Columns needs an active SparkContext → lazy, not module-level
     return [F.col("priority").desc(), F.col("added_ms").asc(),
@@ -98,11 +94,7 @@ def _win_order():
 @dataclass
 class CrawlConfig:
     fetch_ms: int = FETCH_MS
-    use_bloom: bool = True           # use a probabilistic seen-prefilter at all
-    seen_filter: str = "bloom"       # "bloom" | "cuckoo" (north rule §2.7;
-                                     # cuckoo supports force-delete removal)
     bloom: urlseen.BloomParams = field(default_factory=urlseen.BloomParams)
-    cuckoo: "object" = None          # CuckooParams when seen_filter="cuckoo"
     checkpoint_every: int = 0        # 0 → only on explicit .checkpoint()
     validate_fetch: bool = False     # needs page_image/images/images_golden
     tournament_salts: int = 0        # >1 → §4.4 two-level skew tournament
@@ -133,15 +125,6 @@ class CrawlScheduler:
                  config: CrawlConfig | None = None, state_dir: str | None = None):
         self.spark = spark
         self.cfg = config or CrawlConfig()
-        # probabilistic-prefilter backend (§2.7): bloom (default) or
-        # cuckoo — identical exact semantics, same segment partitioning
-        if self.cfg.seen_filter == "cuckoo":
-            from gigaspark.operators import urlseen_cuckoo
-            self.seen_mod = urlseen_cuckoo
-            self.seen_params = self.cfg.cuckoo or urlseen_cuckoo.CuckooParams()
-        else:
-            self.seen_mod = urlseen
-            self.seen_params = self.cfg.bloom
         self.rules: list[Rule] = rules_from_rows(bounded_collect(
             fixtures["url_filters"], 10_000, "url_filters config"))
         self.k_max = max(1, *(r.max_spiders_per_ip for r in self.rules))
@@ -242,13 +225,9 @@ class CrawlScheduler:
         """Logical frontier = union(parts) ⊖ emitted tombstones."""
         if not self.frontier_parts:
             return self.spark.createDataFrame([], self._frontier_schema())
-        acc = self.frontier_parts[0]
-        for p in self.frontier_parts[1:]:
-            acc = acc.unionByName(p)
+        acc = _union(self.frontier_parts)
         if self.removed_parts:
-            rm = self.removed_parts[0]
-            for p in self.removed_parts[1:]:
-                rm = rm.unionByName(p)
+            rm = _union(self.removed_parts)
             # tombstones are k-per-host winner keys — broadcast while
             # small so the (huge, firstip-partitioned) live side never
             # re-shuffles; past the ceiling both sides are partitioned
@@ -264,10 +243,7 @@ class CrawlScheduler:
         """Indexed content-hash registry: (content_hash, owner urlhash48)."""
         if not self.indexed_ch_parts:
             return self.spark.createDataFrame([], "content_hash long, owner long")
-        acc = self.indexed_ch_parts[0]
-        for p in self.indexed_ch_parts[1:]:
-            acc = acc.unionByName(p)
-        return acc
+        return _union(self.indexed_ch_parts)
 
     @property
     def seen(self) -> DataFrame:
@@ -275,10 +251,7 @@ class CrawlScheduler:
             return self.spark.createDataFrame(
                 [], "firstip int, urlhash48 long, min_hopcount int,"
                     " round_enqueued int")
-        acc = self.seen_parts[0]
-        for p in self.seen_parts[1:]:
-            acc = acc.unionByName(p)
-        return acc
+        return _union(self.seen_parts)
 
     def _maybe_compact(self) -> None:
         """Bound view depth: fold parts⊖tombstones into one materialized
@@ -301,11 +274,9 @@ class CrawlScheduler:
             # shuffles only the (tiny) winners side
             self.indexed_ch_parts = [self.indexed_ch.transform(self._ckpt)]
         if len(self.hp_parts) >= 8:
-            hp = self.hp_parts[0]
-            for p in self.hp_parts[1:]:
-                hp = hp.unionByName(p)
             self.hp_parts = [
-                hp.groupBy("firstip").agg(F.sum("d").alias("d"))
+                _union(self.hp_parts)
+                .groupBy("firstip").agg(F.sum("d").alias("d"))
                 .where(F.col("d") != 0).transform(self._ckpt)]
         # emitted/fetched logs are append-only (one lazy projection per
         # round over an already-checkpointed winners DF) but the union
@@ -314,10 +285,7 @@ class CrawlScheduler:
         for attr in ("emitted_parts", "fetched_parts"):
             parts = getattr(self, attr)
             if len(parts) >= 16:
-                acc = parts[0]
-                for p in parts[1:]:
-                    acc = acc.unionByName(p)
-                setattr(self, attr, [acc.transform(self._ckpt)])
+                setattr(self, attr, [_union(parts).transform(self._ckpt)])
 
     @staticmethod
     def _frontier_schema() -> T.StructType:
@@ -430,7 +398,6 @@ class CrawlScheduler:
             F.sum((F.col("_disposition") == "pass").cast("long")).alias("n_pass"),
             F.approx_count_distinct("firstip").alias("n_hosts_est"),
         )
-        t = time.time()
         annotated = df.transform(self._ckpt)
         c = obs.get
         n_pass = int(c["n_pass"] or 0)
@@ -440,7 +407,6 @@ class CrawlScheduler:
         # falls back to the co-partitioned plan, never broadcasts too
         # much)
         self.n_hosts_est += int(c["n_hosts_est"] or 0)
-        t = _tlog("enq:annotated", t)
         passing = annotated.where(F.col("_disposition") == "pass")
         if self.n_seen == 0:
             # seeding fast path: nothing seen yet → every passing key is new
@@ -450,14 +416,12 @@ class CrawlScheduler:
             new, n_new = passing, n_pass
         else:
             obs_new = Observation()
-            new = self.seen_mod.filter_new(
+            new = urlseen.filter_new(
                 passing, self.seen.select("firstip", "urlhash48"),
-                self._segments_for_probe() if self.cfg.use_bloom else None,
-                self.seen_params,
+                self._segments_for_probe(), self.cfg.bloom,
             ).observe(obs_new, F.count(F.lit(1)).alias("n")
                       ).transform(self._ckpt)
             n_new = int(obs_new.get["n"] or 0)
-        t = _tlog("enq:filter_new", t)
 
         m = {"deduped": int(c["total"] or 0), "filtered": int(c["filtered"] or 0),
              "tombstoned": int(c["tombstoned"] or 0),
@@ -476,24 +440,21 @@ class CrawlScheduler:
                               F.col("hopcount").alias("min_hopcount"),
                               F.lit(self.round).alias("round_enqueued"))
         self.seen_parts.append(new_keys)
-        if self.cfg.use_bloom:
-            # LAZY bloom maintenance (round 5): the merged-segments plan
-            # accumulates un-materialized (the same LSM accumulate-then-
-            # fold pattern as the frontier parts) and is checkpointed
-            # only when PROBED (next filter_new) or when 4 merges have
-            # stacked up — a drain-only workload that never probes never
-            # pays the build job at all, and a harvesting crawl pays one
-            # fold per probe instead of one per enqueue
-            add = self.seen_mod.build_segments(new_keys, self.seen_params)
-            self.segments = (
-                add if self.segments is None
-                else self.seen_mod.merge_segments(self.segments, add,
-                                                  self.seen_params))
-            self._seg_pending += 1
-            if self._seg_pending >= 4:
-                self.segments = self.segments.transform(self._ckpt)
-                self._seg_pending = 0
-        t = _tlog("enq:segments", t)
+        # LAZY bloom maintenance (round 5): the merged-segments plan
+        # accumulates un-materialized (the same LSM accumulate-then-
+        # fold pattern as the frontier parts) and is checkpointed
+        # only when PROBED (next filter_new) or when 4 merges have
+        # stacked up — a drain-only workload that never probes never
+        # pays the build job at all, and a harvesting crawl pays one
+        # fold per probe instead of one per enqueue
+        add = urlseen.build_segments(new_keys, self.cfg.bloom)
+        self.segments = (
+            add if self.segments is None
+            else urlseen.merge_segments(self.segments, add, self.cfg.bloom))
+        self._seg_pending += 1
+        if self._seg_pending >= 4:
+            self.segments = self.segments.transform(self._ckpt)
+            self._seg_pending = 0
         return m
 
     def _segments_for_probe(self) -> DataFrame | None:
@@ -517,7 +478,6 @@ class CrawlScheduler:
     # one round — oracle_sim steps 1–5, 7                                 #
     # ------------------------------------------------------------------ #
     def run_round(self) -> int:
-        t = time.time()
         T_ms = self.clock_ms
         n_quota = 0
         if self.cfg.site_quota:
@@ -540,7 +500,6 @@ class CrawlScheduler:
                 self.hp_parts.append(
                     doomed.groupBy("firstip").agg((-F.count("*")).alias("d")))
                 self.pending_count -= n_quota
-            t = _tlog("quota", t)
         # host_state is one row per host ever emitted — broadcast while
         # small (exact count rides the previous round's checkpoint job);
         # past the ceiling the co-partitioned fallback still never
@@ -675,7 +634,6 @@ class CrawlScheduler:
             .transform(self._ckpt)
         )
         wc = obs_w.get
-        t = _tlog("winners", t)
 
         emitted = winners.select(*EMIT_COLS)
         self.emitted_parts.append(emitted)
@@ -711,7 +669,6 @@ class CrawlScheduler:
             .transform(self._ckpt)
         )
         self.n_hosts = int(obs_h.get["n"] or 0)
-        t = _tlog("host_state", t)
         # tombstone the emitted keys (winners is checkpointed → this part
         # is a cheap lazy projection, no frontier re-copy)
         self.removed_parts.append(winners.select("firstip", "urlhash48", "gen"))
@@ -762,7 +719,6 @@ class CrawlScheduler:
                         er.groupBy("firstip").agg(F.count("*").alias("d")))
                     self.pending_count += n_retried
             m["retried"] = n_retried
-            t = _tlog("retry", t)
 
         n_redirected = int(wc["n_redir"] or 0) if self.redirects is not None else 0
         if self.redirects is not None:
@@ -852,7 +808,6 @@ class CrawlScheduler:
                     re_.groupBy("firstip").agg(F.count("*").alias("d")))
                 self.pending_count += n_re
             m["respidered"] = n_re
-            t = _tlog("respider", t)
 
         # skip the whole enqueue pipeline when no winner harvests links
         # (saves ~8 empty-DF jobs per round — most rounds in a drain);
@@ -882,9 +837,7 @@ class CrawlScheduler:
                     F.col("is_seed"),
                 )
                 batch = redirs if batch is None else batch.unionByName(redirs)
-            t = _tlog("outlink-plan", t)
             m.update(self.enqueue(batch))
-            t = _tlog("enqueue", t)
         self.round += 1
         self.metrics.append(m)
 
@@ -912,11 +865,9 @@ class CrawlScheduler:
                 # instead of a separate collect over a round-growing
                 # union (the per-round serial fraction a 10^4-round
                 # crawl multiplies)
-                hp = self.hp_parts[0]
-                for p in self.hp_parts[1:]:
-                    hp = hp.unionByName(p)
                 obs_c = Observation()
-                pend = (hp.groupBy("firstip").agg(F.sum("d").alias("d"))
+                pend = (_union(self.hp_parts)
+                        .groupBy("firstip").agg(F.sum("d").alias("d"))
                         .where(F.col("d") != 0)
                         .join(self.host_state.select("firstip", "next_ok_ms"),
                               "firstip", "left")
@@ -929,10 +880,8 @@ class CrawlScheduler:
                 self.hp_parts = [pend.select("firstip", "d")]
                 min_ok = obs_c.get["min_ok"]
             self.clock_ms = max(self.clock_ms, int(min_ok or 0))
-        t = _tlog("stats", t)
 
         self._maybe_compact()
-        t = _tlog("compact", t)
         if self.cfg.checkpoint_every and self.round % self.cfg.checkpoint_every == 0:
             self.checkpoint()
         return n_emitted
@@ -959,24 +908,18 @@ class CrawlScheduler:
                 " added_ms long, urlhash48 long, url string, firstip int,"
                 " hopcount int, host string",
             )
-        acc = self.emitted_parts[0]
-        for p in self.emitted_parts[1:]:
-            acc = acc.unionByName(p)
         order = [F.col("round").asc(), F.col("scheduled_time_ms").asc(),
                  F.col("priority").desc(), F.col("added_ms").asc(),
                  F.col("urlhash48").asc()]
         from gigaspark.operators.ordering import with_global_seq
         n_emitted = sum(m.get("emitted", 0) for m in self.metrics) or None
-        return with_global_seq(acc, order, "seq",
+        return with_global_seq(_union(self.emitted_parts), order, "seq",
                                small_count=n_emitted).select("seq", *EMIT_COLS)
 
     def fetched_df(self) -> DataFrame | None:
         if not self.fetched_parts:
             return None
-        acc = self.fetched_parts[0]
-        for p in self.fetched_parts[1:]:
-            acc = acc.unionByName(p)
-        return acc
+        return _union(self.fetched_parts)
 
     def metrics_df(self) -> DataFrame:
         keys = sorted({k for m in self.metrics for k in m})
@@ -1001,13 +944,12 @@ class CrawlScheduler:
             tables["indexed_ch"] = self.indexed_ch
         meta = {"round": self.round, "clock_ms": self.clock_ms,
                 "metrics": self.metrics, "n_seen": self.n_seen,
-                "seen_filter": self.cfg.seen_filter,
-                "bloom": {"n_segments": self.cfg.bloom.n_segments,
-                          "m_bits": self.cfg.bloom.m_bits}}
-        if self.cfg.seen_filter == "cuckoo":
-            meta["cuckoo"] = {"n_segments": self.seen_params.n_segments,
-                              "n_buckets": self.seen_params.n_buckets}
+                "seen_filter": "bloom", "bloom": self._bloom_meta()}
         return self.store.commit(self.round, tables, meta)
+
+    def _bloom_meta(self) -> dict:
+        return {"n_segments": self.cfg.bloom.n_segments,
+                "m_bits": self.cfg.bloom.m_bits}
 
     @classmethod
     def resume(cls, spark: SparkSession, fixtures: dict[str, DataFrame],
@@ -1016,13 +958,23 @@ class CrawlScheduler:
         manifest = sched.store.latest()
         if manifest is None:
             raise FileNotFoundError(f"no MANIFEST.json under {state_dir}")
+        meta = manifest["meta"]
+        # stored segments are only readable with the pmod/mask they were
+        # built with: a mismatch would let seen keys read as "definitely
+        # new" and skip the exact anti-join
+        stored = (meta.get("seen_filter"), meta.get("bloom"))
+        want = ("bloom", sched._bloom_meta())
+        if stored != want:
+            raise ValueError(f"snapshot under {state_dir} holds URL-seen "
+                             f"filter {stored}; this config needs {want}")
         tbl = sched.store.load_tables(spark, manifest)
         # restore driver-side counters FIRST so _ckpt's size-adaptive
         # storage choice sees the real state size from the manifest
-        sched.round = manifest["meta"]["round"]
-        sched.clock_ms = manifest["meta"]["clock_ms"]
-        sched.metrics = list(manifest["meta"]["metrics"])
-        sched.n_seen = manifest["meta"].get("n_seen", tbl["seen"].count())
+        sched.round = meta["round"]
+        sched.clock_ms = meta["clock_ms"]
+        sched.metrics = list(meta["metrics"])
+        sched.n_seen = (meta["n_seen"] if "n_seen" in meta
+                        else tbl["seen"].count())
         sched.pending_count = tbl["frontier"].count()
         # re-establish the firstip hash layout on the reloaded state
         # (parquet scans report no useful partitioning) and restore the
@@ -1040,9 +992,9 @@ class CrawlScheduler:
             sched.segments = tbl["bloom_segments"].transform(sched._ckpt)
         if "indexed_ch" in tbl:
             sched.indexed_ch_parts = [tbl["indexed_ch"].transform(sched._ckpt)]
-        emitted = tbl["emitted"]
-        if emitted.columns and not emitted.rdd.isEmpty():
-            sched.emitted_parts = [emitted.select(*EMIT_COLS).transform(sched._ckpt)]
+        if sum(m.get("emitted", 0) for m in sched.metrics):
+            sched.emitted_parts = [
+                tbl["emitted"].select(*EMIT_COLS).transform(sched._ckpt)]
         sched.hp_parts = [
             sched.frontier_parts[0].groupBy("firstip")
             .agg(F.count("*").alias("d")).transform(sched._ckpt)]

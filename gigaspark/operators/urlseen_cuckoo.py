@@ -2,12 +2,14 @@
 names "a partitioned bloom/cuckoo URL-seen set" — this is the cuckoo
 half, the bloom half lives in :mod:`gigaspark.operators.urlseen`).
 
-Same layering as the bloom variant — the filter answers "DEFINITELY
-NEW" with zero shuffle, "maybe seen" falls through to the exact
-left-anti join — so the final semantics stay exact regardless of which
-prefilter is configured (CrawlConfig.seen_filter).  What the cuckoo
-filter adds over bloom (Fan, Andersen, Kaminsky, Mitzenmacher: "Cuckoo
-Filter: Practically Better Than Bloom", CoNEXT 2014):
+A standalone operator: the crawl scheduler's seen set runs the bloom
+variant, and callers that need deletion (the ``urlseen_cuckoo`` entry
+query) use this one directly.  Same layering as the bloom variant — the
+filter answers "DEFINITELY NEW" with zero shuffle, "maybe seen" falls
+through to the exact left-anti join — so the final semantics stay
+exact.  What the cuckoo filter adds over bloom (Fan, Andersen,
+Kaminsky, Mitzenmacher: "Cuckoo Filter: Practically Better Than
+Bloom", CoNEXT 2014):
 
   * **deletion** — a force-deleted URL (Gigablast's ``force_delete``
     url-filter outcome / Spiderdb key tombstone [U][M]) can be REMOVED
@@ -16,10 +18,10 @@ Filter: Practically Better Than Bloom", CoNEXT 2014):
   * bounded fpp at high load: 2 buckets x 4 slots x 16-bit fingerprints
     give fpp ~ 2*4/2^16 ~ 1.2e-4 at ~95% load factor.
 
-Layout: one segment per ``pmod(urlhash48, n_segments)`` (identical
-partitioning to the bloom segments, so a crawl can swap filters without
-re-bucketing state); a segment is a (n_buckets, 4) uint16 table stored
-as binary rows ``(segment_id, table, n_inserted, saturated)``.
+Layout: one segment per ``pmod(urlhash48, n_segments)`` (the same
+partitioning as the bloom segments); a segment is a (n_buckets, 4)
+uint16 table stored as binary rows
+``(segment_id, table, n_inserted, saturated)``.
 
 Scale notes: inserts within a segment are inherently order-dependent
 (cuckoo eviction chains), so the build vectorizes the common

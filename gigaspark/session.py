@@ -60,14 +60,11 @@ def stable_checkpoint(df, serialized: bool | None = None,
     # 9.8s drain, measured 2026-08-18).  So the caller picks:
     # serialized=True for big state (CrawlScheduler flips it once its
     # tracked state rows cross CKPT_SERIALIZED_MIN_ROWS), False/None
-    # for cache-resident state.  $GIGASPARK_CKPT_LEVEL overrides both
-    # for experiments.
+    # for cache-resident state.
     from pyspark.storagelevel import StorageLevel
 
-    level = os.environ.get("GIGASPARK_CKPT_LEVEL")
-    if level is None:
-        level = "MEMORY_AND_DISK" if serialized else "MEMORY_AND_DISK_DESER"
-    slevel = getattr(StorageLevel, level)
+    slevel = (StorageLevel.MEMORY_AND_DISK if serialized
+              else StorageLevel.MEMORY_AND_DISK_DESER)
     aqe_key = "spark.sql.adaptive.enabled"
     aqe_prev = None
     if preserve_partitioning:
@@ -163,7 +160,7 @@ def get_spark(
         # could never kick in)
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         .config("spark.ui.enabled", "false")
-        .config("spark.rdd.compress", os.environ.get("GIGASPARK_RDD_COMPRESS", "true"))
+        .config("spark.rdd.compress", "true")
     )
     if extra:
         for k, v in extra.items():

@@ -10,7 +10,7 @@ Spark ``CrawlScheduler`` on the SAME synthesized universe and asserts:
     by >= fetch_ms + max(same_ip_wait, crawl_delay) (§5.2.5 property);
   * at most max_spiders_per_ip in flight per (round, firstip);
   * no URL emitted twice;
-  * per-round metrics (accepted/dup_seen/filtered/robots_denied) agree.
+  * per-round metrics (clock/accepted/dup_seen/filtered/robots_denied) agree.
 """
 
 from __future__ import annotations
@@ -86,7 +86,8 @@ def test_no_duplicate_emission(micro_run):
 
 def test_metrics_match_oracle(micro_run):
     _, sim_res, sched = micro_run
-    keys = ("emitted", "accepted", "dup_seen", "filtered", "robots_denied", "tombstoned")
+    keys = ("clock_ms", "emitted", "accepted", "dup_seen", "filtered",
+            "robots_denied", "tombstoned")
     got = [{k: m.get(k, 0) for k in keys} for m in sched.metrics]
     want = [{k: m.get(k, 0) for k in keys} for m in sim_res.metrics]
     assert got == want

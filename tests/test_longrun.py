@@ -43,7 +43,7 @@ def _one_per_round_universe(spark):
 
 def test_per_round_time_flat_over_many_rounds(spark):
     seeds, fixtures, n = _one_per_round_universe(spark)
-    sched = CrawlScheduler(spark, fixtures, CrawlConfig(use_bloom=False))
+    sched = CrawlScheduler(spark, fixtures)
     sched.seed(seeds)
 
     times = []
@@ -112,7 +112,7 @@ def test_300_rounds_flat_wall_and_bounded_state_dir(spark, tmp_path):
     state = str(tmp_path / "state300")
     sched = CrawlScheduler(
         spark, fixtures,
-        CrawlConfig(use_bloom=False, checkpoint_every=25, keep_snapshots=2),
+        CrawlConfig(checkpoint_every=25, keep_snapshots=2),
         state_dir=state)
     sched.seed(seeds)
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 
 from gigaspark.operators.frontier import CrawlConfig, CrawlScheduler
+from gigaspark.operators.urlseen import BloomParams
 from gigaspark.synth import SynthParams, gen_all
 from tests.conftest import load_fixtures
 
@@ -98,3 +99,17 @@ def test_time_travel_and_snapshot_gc(spark, nano_dir, tmp_path):
     # resume still works after GC
     resumed = CrawlScheduler.resume(spark, fx, state, CrawlConfig())
     assert resumed.round == ids[-1]
+
+
+def test_resume_rejects_other_bloom_params(spark, nano_dir, tmp_path):
+    """Stored bloom segments are only readable with the segment count
+    and mask they were built with: probing them with other parameters
+    would pass seen keys as "definitely new", so resume refuses."""
+    fx = load_fixtures(spark, nano_dir)
+    state = str(tmp_path / "state_bloom")
+    sched = CrawlScheduler(spark, fx, state_dir=state)
+    sched.seed(spark.read.parquet(f"{nano_dir}/seeds.parquet"))
+    assert "bloom_segments" in sched.checkpoint()["lineage"]
+    other = CrawlConfig(bloom=BloomParams(n_segments=8, m_bits=1 << 14))
+    with pytest.raises(ValueError, match="URL-seen filter"):
+        CrawlScheduler.resume(spark, fx, state, other)

@@ -56,7 +56,7 @@ def _batch_schedule(spark):
         "link_graph": spark.createDataFrame(
             [], "src_url string, dst_urls array<string>"),
     }
-    sched = CrawlScheduler(spark, fixtures, CrawlConfig(use_bloom=False))
+    sched = CrawlScheduler(spark, fixtures)
     sched.enqueue(spark.createDataFrame(
         [(u, a, h, False) for u, a, h, _ in _urls()],
         "url string, added_ms long, hopcount int, is_seed boolean"))
@@ -141,8 +141,7 @@ def _batch_schedule_respider(spark):
         "link_graph": spark.createDataFrame(
             [], "src_url string, dst_urls array<string>"),
     }
-    sched = CrawlScheduler(spark, fixtures, CrawlConfig(use_bloom=False,
-                                                        respider=True))
+    sched = CrawlScheduler(spark, fixtures, CrawlConfig(respider=True))
     sched.enqueue(spark.createDataFrame(
         [(u, a, h, False) for u, a, h, _ in _urls_r()],
         "url string, added_ms long, hopcount int, is_seed boolean"))

