@@ -445,8 +445,8 @@ class CrawlScheduler:
         # fold pattern as the frontier parts) and is checkpointed
         # only when PROBED (next filter_new) or when 4 merges have
         # stacked up — a drain-only workload that never probes never
-        # pays the build job at all, and a harvesting crawl pays one
-        # fold per probe instead of one per enqueue
+        # runs the bitmap aggregates at all, and a harvesting crawl
+        # folds once per probe instead of once per enqueue
         add = urlseen.build_segments(new_keys, self.cfg.bloom)
         self.segments = (
             add if self.segments is None
@@ -458,9 +458,9 @@ class CrawlScheduler:
         return m
 
     def _segments_for_probe(self) -> DataFrame | None:
-        """Materialize any pending bloom merges before a probe (the
-        cogrouped probe would otherwise recompute the whole merge chain
-        per batch)."""
+        """Materialize any pending bloom merges before a probe, so the
+        probe joins stored segment rows instead of re-running the chain
+        of bitmap aggregates, and later probes reuse them."""
         if self.segments is not None and self._seg_pending:
             self.segments = self.segments.transform(self._ckpt)
             self._seg_pending = 0
@@ -944,12 +944,16 @@ class CrawlScheduler:
             tables["indexed_ch"] = self.indexed_ch
         meta = {"round": self.round, "clock_ms": self.clock_ms,
                 "metrics": self.metrics, "n_seen": self.n_seen,
+                "pending_count": self.pending_count, "n_hosts": self.n_hosts,
                 "seen_filter": "bloom", "bloom": self._bloom_meta()}
         return self.store.commit(self.round, tables, meta)
 
     def _bloom_meta(self) -> dict:
+        # layout names the segment row format ((segment_id, bucket) rows
+        # of 32768-bit bitmaps); change it with the format, so resume
+        # refuses snapshots written in another one
         return {"n_segments": self.cfg.bloom.n_segments,
-                "m_bits": self.cfg.bloom.m_bits}
+                "m_bits": self.cfg.bloom.m_bits, "layout": "bitmap-bucket"}
 
     @classmethod
     def resume(cls, spark: SparkSession, fixtures: dict[str, DataFrame],
@@ -959,9 +963,10 @@ class CrawlScheduler:
         if manifest is None:
             raise FileNotFoundError(f"no MANIFEST.json under {state_dir}")
         meta = manifest["meta"]
-        # stored segments are only readable with the pmod/mask they were
-        # built with: a mismatch would let seen keys read as "definitely
-        # new" and skip the exact anti-join
+        # stored segments are only readable with the parameters and row
+        # layout they were built with: a mismatch would let seen keys read
+        # as "definitely new" and skip the exact anti-join.  The check
+        # also refuses snapshots that predate the counts read below.
         stored = (meta.get("seen_filter"), meta.get("bloom"))
         want = ("bloom", sched._bloom_meta())
         if stored != want:
@@ -973,12 +978,11 @@ class CrawlScheduler:
         sched.round = meta["round"]
         sched.clock_ms = meta["clock_ms"]
         sched.metrics = list(meta["metrics"])
-        sched.n_seen = (meta["n_seen"] if "n_seen" in meta
-                        else tbl["seen"].count())
-        sched.pending_count = tbl["frontier"].count()
+        sched.n_seen = meta["n_seen"]
+        sched.pending_count = meta["pending_count"]
         # re-establish the firstip hash layout on the reloaded state
         # (parquet scans report no useful partitioning) and restore the
-        # broadcast-guard counters from real sizes
+        # broadcast-guard counters from the manifest
         sched.frontier_parts = [
             tbl["frontier"].repartition("firstip").transform(sched._ckpt)]
         sched.removed_parts = []
@@ -986,7 +990,7 @@ class CrawlScheduler:
         sched.seen_parts = [
             tbl["seen"].repartition("firstip").transform(sched._ckpt)]
         sched.host_state = tbl["host_state"].transform(sched._ckpt)
-        sched.n_hosts = sched.host_state.count()
+        sched.n_hosts = meta["n_hosts"]
         sched.n_hosts_est = max(sched.n_hosts, 1)
         if "bloom_segments" in tbl:
             sched.segments = tbl["bloom_segments"].transform(sched._ckpt)

@@ -5,40 +5,32 @@ key identity (firstIp‖urlHash48) deduplicates at Rdb merge time
 (``RdbList::merge_r`` [U][H]); an in-RAM dup cache merely short-circuits.
 We mirror that layering:
 
-  * bloom segments answer "DEFINITELY NEW" with zero shuffle against the
-    seen table — those rows bypass the exact join entirely;
-  * "maybe seen" rows (bloom positives, incl. false positives) fall
-    through to an exact left-anti join against the seen keys, so the
+  * bloom segments answer "DEFINITELY NEW" for a candidate, which then
+    can never match the exact join condition;
+  * "maybe seen" rows (bloom positives, incl. false positives) are
+    checked by an exact left-anti join against the seen keys, so the
     final semantics stay exact = reference semantics.
 
-Scale design: one segment per ``pmod(urlhash48, n_segments)`` partition;
-segments are numpy bitarrays built/probed inside ``applyInPandas``
-(Arrow-batched, vectorized bit math — no per-row Python) and persisted as
-binary rows ``(segment_id, bits, n_inserted)`` so a resumed crawl reloads
-them from the checkpoint (ST4).  At 10^10 URLs: n_segments ~ 4096 ×
-m_bits 2^30 ≈ 512 GiB total across executors, fpp < 1% — sized by the
-standard ``m = -n ln p / (ln 2)^2`` formula; locally we default far
-smaller.  Double hashing h_i = h1 + i·h2 (Kirsch–Mitzenmacher).
+Scale design: one segment per ``pmod(urlhash48, n_segments)`` partition,
+``m_bits`` bits each.  Bit position i < K of a key is
+``pmod(xxhash64(urlhash48, i), m_bits) + 1``; Spark's bitmap built-ins
+split it into a 32768-bit bucket (``bitmap_bucket_number``) and a bit in
+that bucket (``bitmap_bit_position``).  A segment is stored as rows
+``(segment_id, bucket, bits, n_inserted)`` — only buckets some key
+touched exist — built by ``bitmap_construct_agg``, merged by
+``bitmap_or_agg`` and probed by an equi-join on ``(segment_id,
+bucket)``: all JVM expressions and aggregates, no Python worker pass.
+The rows are checkpointable, so a resumed crawl reloads them (ST4).  At
+10^10 URLs: n_segments ~ 4096 × m_bits 2^30 ≈ 512 GiB total across
+executors, fpp < 1% — sized by the standard ``m = -n ln p / (ln 2)^2``
+formula; locally we default far smaller.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import (
-    BinaryType, BooleanType, IntegerType, LongType, StructField, StructType,
-)
-
-SEG_SCHEMA = StructType(
-    [
-        StructField("segment_id", IntegerType(), False),
-        StructField("bits", BinaryType(), False),
-        StructField("n_inserted", LongType(), False),
-    ]
-)
 
 _K = 5  # hash functions
 
@@ -46,99 +38,55 @@ _K = 5  # hash functions
 @dataclass(frozen=True)
 class BloomParams:
     n_segments: int = 64
-    m_bits: int = 1 << 20  # per segment; power of two
-
-    @property
-    def m_mask(self) -> int:
-        return self.m_bits - 1
-
-
-def _positions(keys: np.ndarray, p: BloomParams) -> np.ndarray:
-    """(n, K) bit positions for int64 urlhash48 keys — pure numpy."""
-    k = keys.astype(np.uint64)
-    # splitmix64-style mixing for two independent hash streams
-    z = (k + np.uint64(0x9E3779B97F4A7C15)) * np.uint64(0xBF58476D1CE4E5B9)
-    z ^= z >> np.uint64(27)
-    h1 = z * np.uint64(0x94D049BB133111EB)
-    h2 = (z ^ (z >> np.uint64(31))) | np.uint64(1)  # odd
-    i = np.arange(_K, dtype=np.uint64)[None, :]
-    return ((h1[:, None] + i * h2[:, None]) & np.uint64(p.m_mask)).astype(np.int64)
-
-
-def _set_bits(bits: np.ndarray, pos: np.ndarray) -> None:
-    np.bitwise_or.at(bits, pos.ravel() >> 3, (1 << (pos.ravel() & 7)).astype(np.uint8))
-
-
-def _test_bits(bits: np.ndarray, pos: np.ndarray) -> np.ndarray:
-    got = (bits[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1
-    return got.all(axis=1).astype(bool)
+    m_bits: int = 1 << 20  # per segment
 
 
 def segment_id_col(p: BloomParams, key: str = "urlhash48") -> Column:
     return F.pmod(F.col(key), F.lit(p.n_segments)).cast("int").alias("segment_id")
 
 
+def _bit_rows(keys: DataFrame, p: BloomParams) -> DataFrame:
+    """K rows ``(urlhash48, i, segment_id, bucket, bit)`` per key."""
+    pos = F.array(*[F.pmod(F.xxhash64("urlhash48", F.lit(i)), F.lit(p.m_bits)) + 1
+                    for i in range(_K)])
+    return keys.select("urlhash48", segment_id_col(p),
+                       F.posexplode(pos).alias("i", "pos")).select(
+        "urlhash48", "i", "segment_id",
+        F.bitmap_bucket_number("pos").alias("bucket"),
+        F.bitmap_bit_position("pos").alias("bit"))
+
+
 def build_segments(keys: DataFrame, p: BloomParams) -> DataFrame:
-    """keys(urlhash48) → segments DF; one applyInPandas pass, shuffle on
-    segment_id only (already co-located when the frontier is bucketed)."""
-
-    def _build(pdf: pd.DataFrame) -> pd.DataFrame:
-        bits = np.zeros(p.m_bits >> 3, dtype=np.uint8)
-        arr = pdf["urlhash48"].to_numpy(dtype=np.int64)
-        _set_bits(bits, _positions(arr, p))
-        sid = int(pdf["segment_id"].iloc[0]) if len(pdf) else 0
-        return pd.DataFrame(
-            {"segment_id": [sid], "bits": [bits.tobytes()], "n_inserted": [len(arr)]}
-        )
-
-    return (
-        keys.select("urlhash48", segment_id_col(p))
-        .groupBy("segment_id")
-        .applyInPandas(_build, SEG_SCHEMA)
-    )
+    """keys(urlhash48) → segment rows.  A key counts toward
+    ``n_inserted`` in the bucket of its first position only, so the
+    column sums to the number of keys inserted."""
+    return _bit_rows(keys, p).groupBy("segment_id", "bucket").agg(
+        F.bitmap_construct_agg("bit").alias("bits"),
+        F.count_if(F.col("i") == 0).alias("n_inserted"))
 
 
 def merge_segments(a: DataFrame, b: DataFrame, p: BloomParams) -> DataFrame:
     """OR-merge two segment sets (old state ∪ new keys' segments)."""
-
-    def _merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = np.zeros(p.m_bits >> 3, dtype=np.uint8)
-        n = 0
-        for blob, cnt in zip(pdf["bits"], pdf["n_inserted"]):
-            acc |= np.frombuffer(blob, dtype=np.uint8)
-            n += int(cnt)
-        return pd.DataFrame(
-            {"segment_id": [int(pdf["segment_id"].iloc[0])],
-             "bits": [acc.tobytes()], "n_inserted": [n]}
-        )
-
-    return a.unionByName(b).groupBy("segment_id").applyInPandas(_merge, SEG_SCHEMA)
+    return a.unionByName(b).groupBy("segment_id", "bucket").agg(
+        F.bitmap_or_agg("bits").alias("bits"),
+        F.sum("n_inserted").alias("n_inserted"))
 
 
 def probe(candidates: DataFrame, segments: DataFrame, p: BloomParams) -> DataFrame:
-    """Attach ``maybe_seen`` to candidates via cogrouped applyInPandas.
+    """Attach ``maybe_seen`` (all K bits set) to candidates.
 
-    False → definitely new (bypass exact join); True → check exactly.
+    False → definitely new; True → check exactly.
     """
-    out_schema = StructType(
-        [StructField("urlhash48", LongType(), False),
-         StructField("maybe_seen", BooleanType(), False)]
-    )
-
-    def _probe(cand: pd.DataFrame, seg: pd.DataFrame) -> pd.DataFrame:
-        arr = cand["urlhash48"].to_numpy(dtype=np.int64)
-        if len(seg) == 0:
-            res = np.zeros(len(arr), dtype=bool)
-        else:
-            bits = np.frombuffer(seg["bits"].iloc[0], dtype=np.uint8)
-            res = _test_bits(bits, _positions(arr, p))
-        return pd.DataFrame({"urlhash48": arr, "maybe_seen": res})
-
-    keyed = candidates.select("urlhash48", segment_id_col(p)).dropDuplicates(["urlhash48"])
+    byte = F.conv(F.hex(F.substring("bits", F.shiftright("bit", 3).cast("int") + 1, 1)),
+                  16, 10).cast("int")
+    is_set = F.call_function("shiftright", byte,
+                             F.col("bit").bitwiseAND(7).cast("int")).bitwiseAND(1) == 1
     probed = (
-        keyed.groupBy("segment_id")
-        .cogroup(segments.groupBy("segment_id"))
-        .applyInPandas(_probe, out_schema)
+        _bit_rows(candidates.select("urlhash48").dropDuplicates(), p)
+        .join(segments.select("segment_id", "bucket", "bits"),
+              ["segment_id", "bucket"], "left")
+        .groupBy("urlhash48")
+        .agg(F.bool_and(F.coalesce(is_set, F.lit(False))).alias("maybe_seen"))
     )
     return candidates.join(probed, "urlhash48", "left").fillna({"maybe_seen": True})
 
@@ -151,11 +99,14 @@ def filter_new(
     key_cols: tuple[str, str] = ("firstip", "urlhash48"),
 ) -> DataFrame:
     """EXACT new-URL filter: bloom prefilter (if segments given) + left-anti
-    join backstop on (firstip, urlhash48) — SURVEY F5/J5."""
+    join backstop on (firstip, urlhash48) — SURVEY F5/J5.  One anti join
+    on ``maybe_seen AND keys equal``: bloom negatives can never match it,
+    bloom positives get the exact key check."""
     if segments is None:
         return candidates.join(seen_keys, list(key_cols), "left_anti")
-    probed = probe(candidates, segments, p)
-    definitely_new = probed.where(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = probed.where(F.col("maybe_seen")).drop("maybe_seen")
-    checked = maybe.join(seen_keys, list(key_cols), "left_anti")
-    return definitely_new.unionByName(checked)
+    seen = seen_keys.select(*[F.col(c).alias(f"_seen_{c}") for c in key_cols])
+    cond = F.col("maybe_seen")
+    for c in key_cols:
+        cond = cond & (F.col(c) == F.col(f"_seen_{c}"))
+    return (probe(candidates, segments, p)
+            .join(seen, cond, "left_anti").drop("maybe_seen"))

@@ -47,7 +47,7 @@ def _assert_contract(decode, blob):
 @pytest.mark.parametrize("fmt", _IMG_FMTS)
 def test_image_decoders_fuzz(fmt):
     blob = encode_image(fmt, _pix(7, grey=fmt in ("webpv", "jpg420")))
-    rng = np.random.default_rng(hash(fmt) & 0xFFFF)
+    rng = np.random.default_rng(zlib.crc32(fmt.encode()))
     # truncations at assorted depths
     for cut in (0, 1, 4, 10, len(blob) // 3, len(blob) - 1):
         _assert_contract(lambda b: decode_image(fmt, b), blob[:cut])

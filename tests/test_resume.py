@@ -7,6 +7,9 @@ and per-partition lineage as an uninterrupted run.
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 
 from gigaspark.operators.frontier import CrawlConfig, CrawlScheduler
@@ -70,8 +73,6 @@ def test_time_travel_and_snapshot_gc(spark, nano_dir, tmp_path):
     """Iceberg-shaped metadata: every checkpoint is a retained snapshot
     readable via at(id) (time travel), and the GC horizon bounds the
     state dir while NEVER dropping the current pointer's snapshot."""
-    import os
-
     seeds = spark.read.parquet(f"{nano_dir}/seeds.parquet")
     fx = load_fixtures(spark, nano_dir)
     state = str(tmp_path / "state_tt")
@@ -113,3 +114,23 @@ def test_resume_rejects_other_bloom_params(spark, nano_dir, tmp_path):
     other = CrawlConfig(bloom=BloomParams(n_segments=8, m_bits=1 << 14))
     with pytest.raises(ValueError, match="URL-seen filter"):
         CrawlScheduler.resume(spark, fx, state, other)
+
+
+def test_resume_rejects_old_segment_layout(spark, nano_dir, tmp_path):
+    """A snapshot whose bloom metadata carries no segment layout holds
+    one whole-segment bit array per row, which the bucketed probe cannot
+    read, and lacks the counts resume restores: resume refuses it."""
+    fx = load_fixtures(spark, nano_dir)
+    state = str(tmp_path / "state_layout")
+    sched = CrawlScheduler(spark, fx, state_dir=state)
+    sched.seed(spark.read.parquet(f"{nano_dir}/seeds.parquet"))
+    sched.checkpoint()
+    path = os.path.join(state, "MANIFEST.json")
+    with open(path) as f:
+        manifest = json.load(f)
+    p = BloomParams()
+    manifest["meta"]["bloom"] = {"n_segments": p.n_segments, "m_bits": p.m_bits}
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    with pytest.raises(ValueError, match="URL-seen filter"):
+        CrawlScheduler.resume(spark, fx, state, CrawlConfig())

@@ -1,6 +1,7 @@
 """Bloom URL-seen segments: zero false negatives; layered filter is EXACT."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from gigaspark.operators.urlseen import (
     BloomParams, build_segments, filter_new, merge_segments, probe,
@@ -50,3 +51,25 @@ def test_merge_is_union(spark):
     probed = probe(_keys(spark, 0, 2000), merged, P)
     assert probed.where(~F.col("maybe_seen")).count() == 0
     assert merged.agg(F.sum("n_inserted")).collect()[0][0] == 2000
+
+
+@pytest.mark.parametrize("m_bits", [1 << 14, 1 << 15, 1 << 16, 1 << 20])
+def test_bucket_edges(spark, m_bits):
+    """Segments span one 32768-bit bitmap per bucket: 2^15 bits fill
+    exactly one, 2^14 part of one, 2^16 and 2^20 several."""
+    p = BloomParams(n_segments=8, m_bits=m_bits)
+    a, b = _keys(spark, 0, 2500), _keys(spark, 2500, 5000)
+    both = a.unionByName(b)
+    built = build_segments(both, p)
+    assert probe(both, built, p).where(~F.col("maybe_seen")).count() == 0
+    assert built.agg(F.sum("n_inserted")).collect()[0][0] == 5000
+    lo, hi = built.agg(F.min("bucket"), F.max("bucket")).collect()[0]
+    assert 1 <= lo and hi <= max(1, m_bits >> 15)
+
+    def bits(segs):
+        return {(r["segment_id"], r["bucket"]): bytes(r["bits"])
+                for r in segs.collect()}
+
+    merged = merge_segments(build_segments(a, p), build_segments(b, p), p)
+    assert bits(merged) == bits(built)
+    assert merged.agg(F.sum("n_inserted")).collect()[0][0] == 5000
