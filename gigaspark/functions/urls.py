@@ -344,8 +344,7 @@ def canonical_fastpath_col(url: Column) -> Column:
     return url.rlike(_CANONICAL_FAST_RE_JVM)
 
 
-def with_url_columns(df: DataFrame, url_col: str = "url",
-                     single_pass: bool = False) -> DataFrame:
+def with_url_columns(df: DataFrame, url_col: str = "url") -> DataFrame:
     """Canonicalize + derive (url, host, path, firstip, urlhash48).
 
     One Arrow-batched pandas UDF for canonicalization — but only the
@@ -364,21 +363,8 @@ def with_url_columns(df: DataFrame, url_col: str = "url",
     launches) could classify a row differently per branch, duplicating
     or dropping it in the union.  Every in-repo caller feeds parquet /
     checkpointed-state scans (deterministic by construction).  For a
-    nondeterministic input, cache or checkpoint it first, or pass
-    ``single_pass=True`` to stay on the one-evaluation null-mask plan.
+    nondeterministic input, cache or checkpoint it first.
     """
-    if single_pass:
-        c = F.col(url_col)
-        fast = F.coalesce(canonical_fastpath_col(c), F.lit(False))
-        canon = F.coalesce(
-            canonicalize_udf(F.when(~fast, c)), c)
-        df = df.withColumn(url_col, canon)
-        df = df.withColumn("host", host_col(F.col(url_col)))
-        return (
-            df.withColumn("path", path_col(F.col(url_col)))
-            .withColumn("firstip", firstip_col(F.col("host")))
-            .withColumn("urlhash48", urlhash48_col(F.col(url_col)))
-        )
     c = F.col(url_col)
     fast = F.coalesce(canonical_fastpath_col(c), F.lit(False))
     fast_df = df.where(fast)

@@ -93,7 +93,6 @@ def _win_order():
 
 @dataclass
 class CrawlConfig:
-    fetch_ms: int = FETCH_MS
     bloom: urlseen.BloomParams = field(default_factory=urlseen.BloomParams)
     checkpoint_every: int = 0        # 0 → only on explicit .checkpoint()
     validate_fetch: bool = False     # needs page_image/images/images_golden
@@ -571,7 +570,7 @@ class CrawlScheduler:
         winners = winners.withColumn("host", host_col(F.col("url")))
         winners = winners.join(F.broadcast(self.host_delays), "host", "left").withColumn(
             "gap_ms",
-            F.lit(self.cfg.fetch_ms)
+            F.lit(FETCH_MS)
             + F.greatest(F.col("same_ip_wait_ms"),
                          F.coalesce(F.col("crawl_delay_ms"), F.lit(0))),
         )
@@ -692,7 +691,7 @@ class CrawlScheduler:
             if n_errors:
                 er = (winners.where(err_cond)
                       .withColumn("spidered_ms",
-                                  F.col("scheduled_time_ms") + F.lit(self.cfg.fetch_ms))
+                                  F.col("scheduled_time_ms") + F.lit(FETCH_MS))
                       .withColumn("errorcount",
                                   (F.coalesce(F.col("errorcount"), F.lit(0))
                                    + 1).cast("int"))
@@ -746,7 +745,7 @@ class CrawlScheduler:
             # (pinned: robots gate at discovery only).
             re_ = (winners.where(~err_cond & ~redir_cond & ~dup_cond)
                    .withColumn("spidered_ms",
-                               F.col("scheduled_time_ms") + F.lit(self.cfg.fetch_ms))
+                               F.col("scheduled_time_ms") + F.lit(FETCH_MS))
                    .withColumn("is_indexed", F.lit(True)))
             if self.content_gens is not None:
                 # steps 8'/13' — content-driven change signals: hash at
@@ -822,7 +821,7 @@ class CrawlScheduler:
                     .join(self.links, winners["url"] == self.links["src_url"])
                     .select(
                         F.col("dst_url").alias("url"),
-                        (F.col("scheduled_time_ms") + F.lit(self.cfg.fetch_ms)).alias("added_ms"),
+                        (F.col("scheduled_time_ms") + F.lit(FETCH_MS)).alias("added_ms"),
                         (F.col("hopcount") + 1).alias("hopcount"),
                         F.lit(False).alias("is_seed"),
                     )
@@ -832,7 +831,7 @@ class CrawlScheduler:
                 # (same doc), added_ms = slot end, is_seed inherited
                 redirs = winners.where(redir_cond).select(
                     F.col("_redir_dst").alias("url"),
-                    (F.col("scheduled_time_ms") + F.lit(self.cfg.fetch_ms)).alias("added_ms"),
+                    (F.col("scheduled_time_ms") + F.lit(FETCH_MS)).alias("added_ms"),
                     F.col("hopcount"),
                     F.col("is_seed"),
                 )

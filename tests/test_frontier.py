@@ -7,7 +7,7 @@ Spark ``CrawlScheduler`` on the SAME synthesized universe and asserts:
   * emitted crawl order matches EXACTLY, seq by seq (north_rule contract);
   * the URL-seen set matches exactly (firstip, urlhash48, min_hopcount);
   * politeness invariant: consecutive fetches on one firstip are separated
-    by >= fetch_ms + max(same_ip_wait, crawl_delay) (§5.2.5 property);
+    by >= FETCH_MS + max(same_ip_wait, crawl_delay) (§5.2.5 property);
   * at most max_spiders_per_ip in flight per (round, firstip);
   * no URL emitted twice;
   * per-round metrics (clock/accepted/dup_seen/filtered/robots_denied) agree.
@@ -18,7 +18,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from gigaspark.operators.frontier import CrawlConfig, CrawlScheduler
+from gigaspark.operators.frontier import FETCH_MS, CrawlScheduler
 from tests.conftest import load_fixtures
 from tests.oracle_sim import OracleSim
 
@@ -72,7 +72,7 @@ def test_politeness_gaps(micro_run, spark, micro_dir):
         .where(F.col("prev_ms").isNotNull())
         .withColumn("gap", F.col("scheduled_time_ms") - F.col("prev_ms"))
         .withColumn("min_gap",
-                    F.lit(sched.cfg.fetch_ms) + F.coalesce("crawl_delay_ms", F.lit(0)))
+                    F.lit(FETCH_MS) + F.coalesce("crawl_delay_ms", F.lit(0)))
     )
     bad = gaps.where(F.col("gap") < F.col("min_gap")).count()
     assert bad == 0

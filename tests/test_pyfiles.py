@@ -33,7 +33,7 @@ def test_zip_deterministic_and_complete(tmp_path):
         "import sys; sys.path.insert(0, %r); "
         "import gigaspark.operators.frontier, gigaspark.operators.dedup, "
         "gigaspark.operators.similarity, gigaspark.functions.urls, "
-        "gigaspark.streaming.frontier_stream; print('ok')" % z1)
+        "gigaspark.streaming.trap_stream; print('ok')" % z1)
     out = subprocess.run([sys.executable, "-c", code], cwd=str(tmp_path),
                          capture_output=True, text=True, timeout=120)
     assert out.returncode == 0 and out.stdout.strip() == "ok", out.stderr

@@ -240,7 +240,7 @@ def test_fastpath_rejects_noncanonical():
 
 
 def test_with_url_columns_fastpath_parity(spark):
-    """The masked-UDF plan must produce byte-identical canonical URLs
+    """The split fast/slow plan must produce byte-identical canonical URLs
     to the pure canonicalizer for a mixed fast/slow batch (including a
     NULL url, whose behavior must not change)."""
     raws = list(CASES) + list(CASES.values()) + [None]
@@ -279,15 +279,3 @@ def test_fastpath_rlike_rejects_line_terminators(spark):
     ).collect()}
     assert out == {"http://h.example/x"}
 
-
-def test_with_url_columns_single_pass_parity(spark):
-    """single_pass=True (one-evaluation null-mask plan, for
-    re-evaluation-unstable inputs) must agree with the default split
-    plan on every row."""
-    raws = list(CASES) + list(CASES.values()) + [None]
-    df = spark.createDataFrame(list(enumerate(raws)), "i long, url string")
-    cols = ["i", "url", "host", "path", "firstip", "urlhash48"]
-    split = {tuple(r) for r in with_url_columns(df).select(*cols).collect()}
-    one = {tuple(r) for r in
-           with_url_columns(df, single_pass=True).select(*cols).collect()}
-    assert split == one
