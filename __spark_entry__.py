@@ -5134,8 +5134,9 @@ def q_frontier_skew_stats(spark, sf_dir):
     """Ops diagnostic behind the skew knob (SpiderColl per-IP load /
     Statsdb [U][M]): distribution of frontier rows per host over a
     planted megahost universe (one host holds ~30%) — host count, exact
-    p50/p99 via integer rank-pick, max, and max-share permille.  This
-    is the query an operator runs before turning on tournament_salts."""
+    p50/p99 via integer rank-pick, max, and max-share permille: how
+    much of the frontier the winner window's per-host rank limit
+    (WindowGroupLimit) keeps out of one task."""
     from gigaspark.operators.ordering import with_global_seq
 
     o = _t(spark, sf_dir, "orders")

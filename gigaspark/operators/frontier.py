@@ -21,12 +21,13 @@ Determinism (SURVEY §4.5): no wall-clock, no randomness; every ordering
 has a total tie-break ending in urlhash48; the final seq is assigned by
 one explicit global sort — identical output at local[8] and local[32].
 
-Scale notes (10^10-URL design): frontier/seen are key-partitioned by
-urlhash48 (uniform by construction — xxhash64); the only per-host
-ordering shuffle is the winner window, whose partition key firstip is
-protected from megahost skew because a host contributes at most its
-pending set and AQE skew-split handles residue (two-level tournament in
-operators/skew.py is the explicit fallback).  State snapshots commit
+Scale notes (10^10-URL design): frontier/seen are hash-partitioned by
+firstip, so the winner window (partitioned by firstip) runs without a
+shuffle on a compacted frontier.  Its literal ``row_number() <= k_max``
+bound lets Catalyst plan a ``WindowGroupLimit``: when a multi-part
+frontier does shuffle, the Partial limit runs map-side, so at most
+k_max rows per host and input partition cross the exchange, however
+big a megahost's pending set is.  State snapshots commit
 through io/tableio.StateStore (Iceberg-emulating manifest) → exact
 resume (ST4).  Per-round driver work is O(1) scalar aggregates only —
 no ``collect()`` of data rows.
@@ -51,12 +52,6 @@ from gigaspark.functions.urls import host_col, path_col, with_url_columns
 FETCH_MS = 100
 MS_PER_DAY = 86_400_000
 
-# pending-frontier row count above which winner selection switches to
-# the narrow-key window + key-join-back plan (below it, the saved
-# shuffle bytes don't pay for the extra join — measured crossover
-# between the 150k-URL headline bench and the 9.6M-URL scaling job)
-NARROW_WINDOW_MIN_ROWS = 2_000_000
-
 # row-count ceilings for the explicit small-side broadcasts in the
 # round loop (round 5).  The checkpointed state leaves carry no size
 # stats by design (session.stable_checkpoint drops origin stats), so
@@ -67,7 +62,7 @@ NARROW_WINDOW_MIN_ROWS = 2_000_000
 # zero-big-side-exchange plan (state is hash-partitioned by firstip, a
 # subset of every state-join's keys), which is the 10^10-URL path.
 BROADCAST_HOSTS_MAX = 2_000_000      # host_state rows (~24 B/row)
-BROADCAST_KEYS_MAX = 2_000_000       # winner-key / tombstone rows
+BROADCAST_KEYS_MAX = 2_000_000       # tombstone rows
 
 ENQUEUE_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
@@ -96,7 +91,6 @@ class CrawlConfig:
     bloom: urlseen.BloomParams = field(default_factory=urlseen.BloomParams)
     checkpoint_every: int = 0        # 0 → only on explicit .checkpoint()
     validate_fetch: bool = False     # needs page_image/images/images_golden
-    tournament_salts: int = 0        # >1 → §4.4 two-level skew tournament
     respider: bool = False           # J1/W4 re-spider loop (see run_round)
     err_mod: int = 0                 # >0 → fetch fails iff urlhash48 % err_mod == 0
     retry_wait_ms: int = 60_000      # error retry backoff (oracle step 9)
@@ -180,11 +174,14 @@ class CrawlScheduler:
         self.frontier_parts: list[DataFrame] = []
         self.removed_parts: list[DataFrame] = []   # emitted keys (tombstones)
         self.seen_parts: list[DataFrame] = []
-        self.hp_parts: list[DataFrame] = []        # per-host pending deltas
+        # per-host pending deltas, read only by the fast clock (oracle
+        # step 7), which runs when no row can carry a due time; under
+        # respider or error retries the general clock scans the frontier
+        self.fast_clock = not (self.cfg.respider or self.cfg.err_mod)
+        self.hp_parts: list[DataFrame] = []
         self.pending_count = 0                     # exact driver arithmetic
         self.n_removed = 0       # rows across removed_parts (exact)
         self.n_hosts = 0         # host_state rows (exact, via Observation)
-        self.n_hosts_est = 0     # distinct firstips ever enqueued (approx)
         self.host_state = spark.createDataFrame(
             [], "firstip int, next_ok_ms long, n_emitted long")
         self.segments = None  # bloom segments DF (lazy-init on first enqueue)
@@ -344,9 +341,9 @@ class CrawlScheduler:
         # duplicate outlinks cross the wire once — bytes proportional
         # to the BATCH, while the savings are proportional to the
         # accumulated FRONTIER every round; at 10^10 URLs that trade is
-        # ~1:rounds in our favor.  Megahost skew lands one host per
-        # partition, which is the same exposure the winner window
-        # always had — operators/skew.py tournament_prune is the guard.
+        # ~1:rounds in our favor.  A megahost lands whole in one
+        # partition; the winner window's WindowGroupLimit keeps each
+        # round's sort input bounded there (see _select_winners).
         df = df.repartition("firstip")
         # batch dedup on key: min hop / min added / min url / any is_seed
         df = (
@@ -395,17 +392,10 @@ class CrawlScheduler:
             F.sum((F.col("_disposition") == "tombstoned").cast("long")).alias("tombstoned"),
             F.sum((F.col("_disposition") == "robots_denied").cast("long")).alias("robots_denied"),
             F.sum((F.col("_disposition") == "pass").cast("long")).alias("n_pass"),
-            F.approx_count_distinct("firstip").alias("n_hosts_est"),
         )
         annotated = df.transform(self._ckpt)
         c = obs.get
         n_pass = int(c["n_pass"] or 0)
-        # conservative winner-key bound input: summing per-batch
-        # approx-distincts OVER-estimates the true union (safe
-        # direction for a broadcast ceiling — too big an estimate only
-        # falls back to the co-partitioned plan, never broadcasts too
-        # much)
-        self.n_hosts_est += int(c["n_hosts_est"] or 0)
         passing = annotated.where(F.col("_disposition") == "pass")
         if self.n_seen == 0:
             # seeding fast path: nothing seen yet → every passing key is new
@@ -433,8 +423,9 @@ class CrawlScheduler:
 
         self.frontier_parts.append(
             new.select(*[f.name for f in self._frontier_schema().fields]))
-        self.hp_parts.append(
-            new.groupBy("firstip").agg(F.count("*").alias("d")))
+        if self.fast_clock:
+            self.hp_parts.append(
+                new.groupBy("firstip").agg(F.count("*").alias("d")))
         new_keys = new.select("firstip", "urlhash48",
                               F.col("hopcount").alias("min_hopcount"),
                               F.lit(self.round).alias("round_enqueued"))
@@ -473,6 +464,35 @@ class CrawlScheduler:
                          F.coalesce(F.col("is_seed"), F.lit(True)).alias("is_seed"))
         )
 
+    def _select_winners(self, T_ms: int) -> DataFrame:
+        """Doledb A1 drain (oracle steps 1–2): the rows eligible at
+        ``T_ms``, cut to each host's first ``max_spiders_per_ip`` by
+        ``_win_order()``.
+
+        The rank-only ``row_number() <= k_max`` filter drops no winner
+        (every row's ``max_spiders_per_ip`` comes from ``self.rules``,
+        so the per-host bound is at most k_max) and is the form
+        Catalyst's InferWindowGroupLimit turns into ``WindowGroupLimit``.
+        A non-rank function in the same window (the ``first()`` below)
+        would stop it, so the per-host bound is read only from the
+        ≤ k_max survivors."""
+        # host_state is one row per host ever emitted — broadcast while
+        # small (exact count rides the previous round's checkpoint job);
+        # past the ceiling the co-partitioned fallback exchanges no wide
+        # side only while the frontier is one compacted part
+        hs = self.host_state
+        if self.n_hosts <= BROADCAST_HOSTS_MAX:
+            hs = F.broadcast(hs)
+        elig = (self.frontier.join(hs, "firstip", "left")
+                .where((F.coalesce(F.col("next_ok_ms"), F.lit(0)) <= F.lit(T_ms))
+                       & (F.col("due_ms") <= F.lit(T_ms))))
+        w = Window.partitionBy("firstip").orderBy(*_win_order())
+        return (elig.withColumn("rn", F.row_number().over(w))
+                .where(F.col("rn") <= F.lit(self.k_max))
+                .withColumn("k_host", F.first("max_spiders_per_ip").over(w))
+                .where(F.col("rn") <= F.greatest(F.col("k_host"), F.lit(1)))
+                .drop("rn", "k_host"))
+
     # ------------------------------------------------------------------ #
     # one round — oracle_sim steps 1–5, 7                                 #
     # ------------------------------------------------------------------ #
@@ -496,74 +516,11 @@ class CrawlScheduler:
             if n_quota:
                 self.removed_parts.append(doomed)
                 self.n_removed += n_quota
-                self.hp_parts.append(
-                    doomed.groupBy("firstip").agg((-F.count("*")).alias("d")))
+                if self.fast_clock:
+                    self.hp_parts.append(doomed.groupBy("firstip").agg(
+                        (-F.count("*")).alias("d")))
                 self.pending_count -= n_quota
-        # host_state is one row per host ever emitted — broadcast while
-        # small (exact count rides the previous round's checkpoint job);
-        # past the ceiling the co-partitioned fallback still never
-        # exchanges the wide frontier side
-        hs = self.host_state
-        if self.n_hosts <= BROADCAST_HOSTS_MAX:
-            hs = F.broadcast(hs)
-        f = self.frontier.join(hs, "firstip", "left").withColumn(
-            "next_ok_ms", F.coalesce(F.col("next_ok_ms"), F.lit(0)))
-        elig = f.where((F.col("next_ok_ms") <= F.lit(T_ms))
-                       & (F.col("due_ms") <= F.lit(T_ms)))
-
-        # Size-adaptive winner selection (round 4).  NARROW path for big
-        # frontiers: only the window's key + ORDER columns cross the
-        # per-host shuffle (~3× fewer bytes than full frontier rows —
-        # the url strings stay put in the cached checkpoint
-        # partitions), then the k-per-host winner KEYS join back onto
-        # elig.  The frontier checkpoint is hash-partitioned by
-        # (firstip, urlhash48) from the enqueue dedup agg, a subset of
-        # the join keys, so the wide side needs NO exchange for the
-        # join-back; only the tiny key set moves (AQE picks broadcast
-        # when it fits).  State bytes are the scaling currency at 10^10
-        # URLs — this keeps the per-round shuffle proportional to key
-        # width, not row width.  For SMALL frontiers the saved bytes
-        # don't pay for the extra join, so the classic full-width
-        # window runs instead — the winner set (and therefore the
-        # schedule) is IDENTICAL either way; pending_count is an exact
-        # driver scalar, so the choice is deterministic.
-        use_narrow = (self.pending_count >= NARROW_WINDOW_MIN_ROWS
-                      or self.cfg.tournament_salts > 1)
-        w = Window.partitionBy("firstip").orderBy(*_win_order())
-        if use_narrow:
-            narrow = elig.select("firstip", "urlhash48", "gen", "priority",
-                                 "added_ms", "hopcount", "max_spiders_per_ip")
-            if self.cfg.tournament_salts > 1:
-                # megahost-skew guard: identical winners, bounded task size
-                from gigaspark.operators.skew import tournament_prune
-                narrow = tournament_prune(narrow, ["firstip"], _win_order(),
-                                          self.k_max, "urlhash48",
-                                          self.cfg.tournament_salts)
-            ranked = (
-                narrow.withColumn("rn", F.row_number().over(w))
-                .withColumn("k_host", F.first("max_spiders_per_ip").over(w))
-            )
-            winkeys = (ranked
-                       .where(F.col("rn")
-                              <= F.greatest(F.col("k_host"), F.lit(1)))
-                       .select("firstip", "urlhash48", "gen"))
-            # winner keys are ≤ k_max per pending host — broadcast the
-            # join-back while that bound is small (keeps the wide elig
-            # side exchange-free AND partitioned for the politeness
-            # window below); fallback = co-partitioned key join
-            win_bound = min(self.pending_count,
-                            self.k_max * max(self.n_hosts_est, 1))
-            if win_bound <= BROADCAST_KEYS_MAX:
-                winkeys = F.broadcast(winkeys)
-            winners = elig.join(winkeys, ["firstip", "urlhash48", "gen"])
-        else:
-            ranked = (
-                elig.withColumn("rn", F.row_number().over(w))
-                .withColumn("k_host", F.first("max_spiders_per_ip").over(w))
-            )
-            winners = ranked.where(
-                F.col("rn") <= F.greatest(F.col("k_host"), F.lit(1))
-            ).drop("rn", "k_host")
+        winners = self._select_winners(T_ms)
         # politeness gap per fetched URL: fetch + max(rule wait, host crawl_delay)
         # (host re-derived from url — winners is k-per-host tiny, and the
         # frontier deliberately doesn't store host/path strings)
@@ -671,8 +628,9 @@ class CrawlScheduler:
         # tombstone the emitted keys (winners is checkpointed → this part
         # is a cheap lazy projection, no frontier re-copy)
         self.removed_parts.append(winners.select("firstip", "urlhash48", "gen"))
-        self.hp_parts.append(
-            winners.groupBy("firstip").agg((-F.count("*")).alias("d")))
+        if self.fast_clock:
+            self.hp_parts.append(
+                winners.groupBy("firstip").agg((-F.count("*")).alias("d")))
 
         n_emitted = int(wc["n"] or 0)
         self.pending_count -= n_emitted
@@ -714,8 +672,6 @@ class CrawlScheduler:
                 if n_retried:
                     self.frontier_parts.append(
                         er.select(*[fld.name for fld in self._frontier_schema().fields]))
-                    self.hp_parts.append(
-                        er.groupBy("firstip").agg(F.count("*").alias("d")))
                     self.pending_count += n_retried
             m["retried"] = n_retried
 
@@ -803,8 +759,6 @@ class CrawlScheduler:
             if n_re:
                 self.frontier_parts.append(
                     re_.select(*[fld.name for fld in self._frontier_schema().fields]))
-                self.hp_parts.append(
-                    re_.groupBy("firstip").agg(F.count("*").alias("d")))
                 self.pending_count += n_re
             m["respidered"] = n_re
 
@@ -846,7 +800,7 @@ class CrawlScheduler:
         # the full wide frontier
         m["pending"] = self.pending_count
         if self.pending_count > 0:
-            if self.cfg.respider or self.cfg.err_mod:
+            if not self.fast_clock:
                 # general clock rule (oracle step 7'): advance to the
                 # earliest moment ANY pending row can run = min over rows
                 # of max(host next_ok, row due) — needs per-row due times,
@@ -990,7 +944,6 @@ class CrawlScheduler:
             tbl["seen"].repartition("firstip").transform(sched._ckpt)]
         sched.host_state = tbl["host_state"].transform(sched._ckpt)
         sched.n_hosts = meta["n_hosts"]
-        sched.n_hosts_est = max(sched.n_hosts, 1)
         if "bloom_segments" in tbl:
             sched.segments = tbl["bloom_segments"].transform(sched._ckpt)
         if "indexed_ch" in tbl:
@@ -998,7 +951,8 @@ class CrawlScheduler:
         if sum(m.get("emitted", 0) for m in sched.metrics):
             sched.emitted_parts = [
                 tbl["emitted"].select(*EMIT_COLS).transform(sched._ckpt)]
-        sched.hp_parts = [
-            sched.frontier_parts[0].groupBy("firstip")
-            .agg(F.count("*").alias("d")).transform(sched._ckpt)]
+        if sched.fast_clock:
+            sched.hp_parts = [
+                sched.frontier_parts[0].groupBy("firstip")
+                .agg(F.count("*").alias("d")).transform(sched._ckpt)]
         return sched

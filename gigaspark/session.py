@@ -41,8 +41,9 @@ def stable_checkpoint(df, serialized: bool | None = None,
     ``UnknownPartitioning``), so AQE is toggled off around the
     checkpoint action and restored after.  The loop's heavy lifting is
     exactly these checkpoint materializations, whose plans are already
-    explicitly partition-sized (2×cores) and explicitly skew-guarded
-    (operators/skew.py tournament), so losing AQE there costs nothing.
+    explicitly partition-sized (2×cores) and whose only per-host window
+    is bounded by WindowGroupLimit (frontier._select_winners), so losing
+    AQE's skew split there costs nothing.
 
     Falls back to the plain checkpoint if the JVM-internal constructor
     is unavailable.

@@ -108,31 +108,68 @@ def test_tiny_universe_order(spark, tiny_dir):
     assert got_seen == set(sim_res.seen)
 
 
-def test_narrow_window_plan_equivalence(spark, micro_dir, monkeypatch):
-    """VERDICT r4 item 3: the narrow-key winner window (the big-frontier
-    plan, normally gated on NARROW_WINDOW_MIN_ROWS=2M pending rows) must
+def test_copartitioned_plan_equivalence(micro_run, spark, micro_dir,
+                                        monkeypatch):
+    """The co-partitioned fallback joins (host_state and tombstones past
+    their broadcast ceilings, the plan a 10^10-URL frontier takes) must
     emit the IDENTICAL (seq, urlhash48) schedule as the default
-    full-width window.  Forcing the threshold to 0 makes every round
-    take the narrow path on the golden micro-universe; run at two
-    parallelism levels via shuffle-partition override to also pin
-    layout-independence."""
+    broadcast plan.  Forcing both ceilings to -1 makes every round take
+    the fallback on the golden micro-universe; running it at a second
+    shuffle-partition count also pins layout-independence."""
     import gigaspark.operators.frontier as fr
 
-    def run_schedule():
-        sched = CrawlScheduler(spark, load_fixtures(spark, micro_dir))
-        sched.run(max_rounds=MAX_ROUNDS,
-                  seeds=spark.read.parquet(f"{micro_dir}/seeds.parquet"))
+    def schedule(sched):
         return [(r["seq"], r["urlhash48"])
                 for r in sched.emitted_df().orderBy("seq").collect()]
 
-    default_order = run_schedule()
-    monkeypatch.setattr(fr, "NARROW_WINDOW_MIN_ROWS", 0)
+    default_order = schedule(micro_run[2])
+    monkeypatch.setattr(fr, "BROADCAST_HOSTS_MAX", -1)
+    monkeypatch.setattr(fr, "BROADCAST_KEYS_MAX", -1)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        narrow_order = run_schedule()
         spark.conf.set("spark.sql.shuffle.partitions", "3")
-        narrow_order_p3 = run_schedule()
+        sched = CrawlScheduler(spark, load_fixtures(spark, micro_dir))
+        sched.run(max_rounds=MAX_ROUNDS,
+                  seeds=spark.read.parquet(f"{micro_dir}/seeds.parquet"))
+        fallback_order_p3 = schedule(sched)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    assert narrow_order == default_order
-    assert narrow_order_p3 == default_order
+    assert fallback_order_p3 == default_order
+
+
+# synth's rule table with per-rule fetch slots 0–3 instead of all 1: a
+# host whose top URL is a seed gets one slot even though its other rows
+# allow three, so the per-host bound differs from k_max
+MIXED_K_FILTERS = [
+    (0, "ismedia", -3, 30.0, 1, 0, False, False),
+    (1, "hopcount>=7", -3, 30.0, 1, 0, False, False),
+    (2, "urlmatch~=banned", -2, 30.0, 1, 0, False, False),
+    (3, "urlmatch~=killme", 60, 30.0, 1, 0, False, True),
+    (4, "isseed", 80, 30.0, 1, 150, True, False),
+    (5, "iswww && hopcount>=2", 25, 30.0, 2, 250, True, False),
+    (6, "hopcount>=3", 35, 30.0, 0, 100, False, False),
+    (7, "default", 55, 30.0, 3, 100, True, False),
+]
+
+
+def test_mixed_per_host_limits_match_oracle(spark, micro_dir, tmp_path):
+    """The winner window's literal ``row_number() <= k_max`` bound must
+    drop no winner when hosts' own bounds (their top URL's
+    max_spiders_per_ip, 0 read as 1) are below k_max."""
+    import shutil
+
+    from tests.test_errors_quota import _write_rules
+
+    d = str(tmp_path / "mixed_k")
+    shutil.copytree(micro_dir, d)
+    _write_rules(d, MIXED_K_FILTERS)
+
+    rounds = 8
+    sim_res = OracleSim(d).run(max_rounds=rounds)
+    sched = CrawlScheduler(spark, load_fixtures(spark, d))
+    assert sched.k_max == 3
+    sched.run(max_rounds=rounds, seeds=spark.read.parquet(f"{d}/seeds.parquet"))
+    got = [(r["seq"], r["urlhash48"], r["scheduled_time_ms"]) for r in
+           sched.emitted_df().orderBy("seq").collect()]
+    want = [(e.seq, e.urlhash48, e.scheduled_time_ms) for e in sim_res.emitted]
+    assert got == want

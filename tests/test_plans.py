@@ -128,41 +128,73 @@ def test_bounded_collect_raises():
         bounded_collect(df, 99, "too many")
 
 
+def _winner_plan(sched):
+    """Executed plan of the scheduler's own winner selection plus the
+    politeness window run_round puts on top of it."""
+    from pyspark.sql import Window, functions as F
+
+    from gigaspark.operators.frontier import _win_order
+
+    cum = Window.partitionBy("firstip").orderBy(*_win_order()) \
+        .rowsBetween(Window.unboundedPreceding, -1)
+    df = sched._select_winners(sched.clock_ms).withColumn(
+        "t", F.coalesce(F.sum(F.lit(100)).over(cum), F.lit(0)))
+    return df, df._jdf.queryExecution().executedPlan().toString()
+
+
+def _n_shuffles(plan: str) -> int:
+    return plan.count("Exchange") - plan.count("BroadcastExchange")
+
+
 def test_round_plan_exchange_free(spark, micro_dir):
     """Round-5 scale property: once the frontier is checkpointed with
     its firstip hash-partitioning preserved, the ENTIRE per-round
     winner selection — host_state join, winner window, politeness
     window — plans with ZERO Exchange operators (the wide state never
-    re-shuffles; per-round shuffle bytes ~0 at any frontier size)."""
-    from pyspark.sql import Window, functions as F
+    re-shuffles; per-round shuffle bytes ~0 at any frontier size), and
+    the winner window carries Catalyst's per-host rank limit."""
     from tests.conftest import load_fixtures
 
-    from gigaspark.operators.frontier import (CrawlConfig, CrawlScheduler,
-                                              _win_order)
+    from gigaspark.operators.frontier import CrawlScheduler
 
-    sched = CrawlScheduler(spark, load_fixtures(spark, micro_dir),
-                           CrawlConfig())
+    sched = CrawlScheduler(spark, load_fixtures(spark, micro_dir))
     sched.seed(spark.read.parquet(f"{micro_dir}/seeds.parquet"))
+    assert len(sched.frontier_parts) == 1
 
-    hs = F.broadcast(sched.host_state)
-    f = sched.frontier.join(hs, "firstip", "left").withColumn(
-        "next_ok_ms", F.coalesce(F.col("next_ok_ms"), F.lit(0)))
-    elig = f.where((F.col("next_ok_ms") <= F.lit(0))
-                   & (F.col("due_ms") <= F.lit(0)))
-    w = Window.partitionBy("firstip").orderBy(*_win_order())
-    winners = (elig.withColumn("rn", F.row_number().over(w))
-               .where(F.col("rn") <= 2).drop("rn"))
-    cum = Window.partitionBy("firstip").orderBy(*_win_order()) \
-        .rowsBetween(Window.unboundedPreceding, -1)
-    sched_plan = winners.withColumn(
-        "t", F.coalesce(F.sum(F.lit(100)).over(cum), F.lit(0)))
-    plan = sched_plan._jdf.queryExecution().executedPlan().toString()
-    n_shuffle = plan.count("Exchange") - plan.count("BroadcastExchange")
+    df, plan = _winner_plan(sched)
+    n_shuffle = _n_shuffles(plan)
     assert n_shuffle == 0, \
         f"per-round plan has {n_shuffle} shuffle Exchange(s):\n{plan[:2000]}"
     # the tiny host_state broadcast is the ONLY data movement
     assert plan.count("BroadcastExchange") <= 1
     # and the rank-limit pushdown engaged (bounded sort input per host)
-    assert "WindowGroupLimit" in plan
+    assert "WindowGroupLimit" in plan, plan[:3000]
     # the plan is real: it still produces the winner rows
-    assert sched_plan.count() > 0
+    assert df.count() > 0
+
+
+def test_round_plan_rank_limit_below_shuffle(spark, tiny_dir):
+    """On a multi-part frontier (seed part + one round's harvest) the
+    union loses the firstip layout and the winner window shuffles once.
+    The Partial WindowGroupLimit must run BELOW that exchange, so at
+    most k_max rows per host and input partition cross it — a megahost
+    cannot funnel its whole pending set through one task."""
+    from tests.conftest import load_fixtures
+
+    from gigaspark.operators.frontier import CrawlScheduler
+
+    sched = CrawlScheduler(spark, load_fixtures(spark, tiny_dir))
+    sched.seed(spark.read.parquet(f"{tiny_dir}/seeds.parquet"))
+    sched.run_round()
+    assert len(sched.frontier_parts) == 2   # the round harvested
+
+    df, plan = _winner_plan(sched)
+    assert _n_shuffles(plan) == 1, plan[:3000]
+    lines = plan.splitlines()
+    shuffle = next(i for i, ln in enumerate(lines)
+                   if "Exchange hashpartitioning" in ln)
+    wgl = {ln.rsplit(",", 1)[1].strip(): i for i, ln in enumerate(lines)
+           if "WindowGroupLimit" in ln}
+    assert set(wgl) == {"Partial", "Final"}, plan[:3000]
+    assert wgl["Final"] < shuffle < wgl["Partial"], plan[:3000]
+    assert df.count() > 0

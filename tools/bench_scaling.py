@@ -52,7 +52,6 @@ from gigaspark.operators.frontier import CrawlConfig, CrawlScheduler
 cores = int(sys.argv[1]); sf_dir = sys.argv[2]; repl = int(sys.argv[3])
 skew = len(sys.argv) > 4 and sys.argv[4] == "skew"
 messy = len(sys.argv) > 4 and sys.argv[4] == "messy"
-salts = int(sys.argv[5]) if len(sys.argv) > 5 else 0
 spark = get_spark(f"scale-{cores}", cores=cores, shuffle_partitions=2 * cores)
 spark.sparkContext.setLogLevel("ERROR")
 
@@ -62,8 +61,7 @@ base = orders.select(
     F.explode(F.sequence(F.lit(0), F.lit(repl - 1))).alias("j"))
 if skew:
     # megahost universe (SURVEY §4.4): ONE host owns ~30% of the
-    # frontier; the rest spread over 8192 hosts.  This is the regime the
-    # two-level tournament (tournament_salts) exists for.
+    # frontier; the rest spread over 8192 hosts.
     hostno = ((F.col("o_custkey") * repl + F.col("j")) % 8192).cast("string")
     host_expr = F.when((F.col("o_orderkey") + F.col("j")) % 10 < 3,
                        F.lit("megahost")).otherwise(F.concat(F.lit("host"), hostno))
@@ -124,7 +122,7 @@ seeds = seeds.localCheckpoint(eager=True)  # input materialized before t0
 # ckpt_serialized=True: the 9.6M-URL job is past the DRAM-bound
 # crossover from the first (seed) checkpoint, which the size-adaptive
 # rule only detects after that checkpoint has materialized once
-cfg = CrawlConfig(tournament_salts=salts, ckpt_serialized=True)
+cfg = CrawlConfig(ckpt_serialized=True)
 warm = CrawlScheduler(spark, fixtures, cfg)
 warm.seed(seeds.limit(20000))
 warm.run_round()
@@ -138,13 +136,12 @@ em = sched.emitted_df().select("seq", "urlhash48", "scheduled_time_ms")
 h = em.selectExpr("bit_xor(xxhash64(seq, urlhash48, scheduled_time_ms)) AS h").collect()[0][0]
 print(json.dumps({"cores": cores, "crawl_s": round(dt, 2), "urls": n,
                   "urls_per_sec": round(n / dt, 1), "order_hash": h,
-                  "skew": skew, "tournament_salts": salts}))
+                  "skew": skew}))
 """
 
 
 def run_level(cores: int, sf_dir: str, repl: int,
-              skew: bool = False, salts: int = 0,
-              messy: bool = False) -> dict:
+              skew: bool = False, messy: bool = False) -> dict:
     """Run one parallelism level PINNED to exactly ``cores`` CPUs.
 
     ``local[N]`` alone does NOT model an N-core cluster for pandas-UDF
@@ -155,9 +152,8 @@ def run_level(cores: int, sf_dir: str, repl: int,
     budget — the same constraint a real N-core executor node has.
     """
     cmd = [sys.executable, "-c", WORKER, str(cores), sf_dir, str(repl)]
-    if skew or salts or messy:
-        cmd += ["skew" if skew else ("messy" if messy else "uniform"),
-                str(salts)]
+    if skew or messy:
+        cmd += ["skew" if skew else "messy"]
     if os.path.exists("/usr/bin/taskset"):
         cmd = ["/usr/bin/taskset", "-c", f"0-{cores - 1}"] + cmd
     env = dict(os.environ)
@@ -237,21 +233,6 @@ def scaling_pair(ncores: int, sf_dir: str, repl: int, reps: int,
     }
 
 
-def skew_tournament(cores: int, sf_dir: str, repl: int) -> dict:
-    """Megahost universe (1 host ≈ 30% of frontier): salts=0 vs 16 must
-    produce the IDENTICAL schedule (order_hash equality is the
-    correctness claim; the salted plan bounds per-task size — the
-    guarantee that matters at 10^10 URLs where one host's candidate set
-    cannot fit a single task)."""
-    plain = run_level(cores, sf_dir, repl, skew=True, salts=0)
-    salted = run_level(cores, sf_dir, repl, skew=True, salts=16)
-    return {
-        "cores": cores,
-        "salts0": plain, "salts16": salted,
-        "identical_order": plain["order_hash"] == salted["order_hash"],
-    }
-
-
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     repl = int(sys.argv[2]) if len(sys.argv) > 2 else 64
@@ -268,10 +249,9 @@ def main() -> None:
         **scaling_pair(ncores, sf_dir, 128, reps, messy=True),
         # …plus transparency controls on the all-clean grammar: the
         # 2→8 pair at repl=64 (fast-path-dominated regime) and the
-        # 4→16 bus-ceiling pair, and the megahost-skew tournament
+        # 4→16 bus-ceiling pair
         "pair_clean_repl64": scaling_pair(ncores, sf_dir, repl, reps),
         "pair_4_16": scaling_pair(4, sf_dir, repl, reps),
-        "skew_tournament": skew_tournament(8, sf_dir, repl),
     }
     print(json.dumps(res, indent=2))
     with open("BENCH_SCALING.json", "w") as f:
