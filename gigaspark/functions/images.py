@@ -57,15 +57,6 @@ def decode_ppm(data: bytes) -> np.ndarray:
 
 # --- PNG (8-bit RGB, minimal conformant subset) ------------------------------
 
-def _png_chunk(tag: bytes, body: bytes) -> bytes:
-    return (
-        struct.pack(">I", len(body))
-        + tag
-        + body
-        + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-    )
-
-
 def encode_png(pix: np.ndarray) -> bytes:
     """Full PNG codec lives in functions/png.py (all five filters,
     color types 0/2/3/4/6, depths 1-16, tRNS, Adam7); this wrapper

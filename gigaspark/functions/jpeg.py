@@ -191,15 +191,6 @@ def _subsample(plane: np.ndarray, fh: int, fv: int) -> np.ndarray:
     return p.reshape(ph // fv, fv, pw // fh, fh).mean(axis=(1, 3))
 
 
-def _blockify(chan: np.ndarray) -> tuple[np.ndarray, int, int]:
-    """Edge-pad to multiples of 8 and return (n_blocks, 8, 8) row-major."""
-    h, w = chan.shape
-    bh, bw = -(-h // 8), -(-w // 8)
-    padded = np.pad(chan, ((0, bh * 8 - h), (0, bw * 8 - w)), mode="edge")
-    blocks = padded.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
-    return blocks, bh, bw
-
-
 def _blockify_grid(chan: np.ndarray, bh: int, bw: int) -> np.ndarray:
     """Edge-pad to a GIVEN block grid (the MCU-padded one) and return
     (bh*bw, 8, 8) row-major."""
