@@ -91,7 +91,7 @@ class CrawlConfig:
     bloom: urlseen.BloomParams = field(default_factory=urlseen.BloomParams)
     checkpoint_every: int = 0        # 0 → only on explicit .checkpoint()
     validate_fetch: bool = False     # needs page_image/images/images_golden
-    respider: bool = False           # J1/W4 re-spider loop (see run_round)
+    respider: bool = False           # J1/W4 re-spider loop (see _reenter)
     err_mod: int = 0                 # >0 → fetch fails iff urlhash48 % err_mod == 0
     retry_wait_ms: int = 60_000      # error retry backoff (oracle step 9)
     site_quota: int = 0              # >0 → per-firstip successful-fetch cap (step 10)
@@ -366,7 +366,7 @@ class CrawlScheduler:
               .withColumn("due_ms", F.lit(0).cast("long"))
               .withColumn("backoff", F.lit(1).cast("int")))
         df = apply_url_filters(df, self.rules)
-        df = robots_op.eval_allowed(df, self.robots_rules, self.robots_grouped)
+        df = robots_op.eval_allowed(df, self.robots_grouped)
         df = df.withColumn(
             "_disposition",
             F.when(F.col("force_delete"), "tombstoned")
@@ -393,15 +393,16 @@ class CrawlScheduler:
             F.sum((F.col("_disposition") == "robots_denied").cast("long")).alias("robots_denied"),
             F.sum((F.col("_disposition") == "pass").cast("long")).alias("n_pass"),
         )
-        annotated = df.transform(self._ckpt)
+        # only passing rows are stored: the tallies above already saw
+        # the rest, and every later winner scan would re-read them
+        passing = (df.where(F.col("_disposition") == "pass")
+                   .drop("_disposition").transform(self._ckpt))
         c = obs.get
         n_pass = int(c["n_pass"] or 0)
-        passing = annotated.where(F.col("_disposition") == "pass")
         if self.n_seen == 0:
             # seeding fast path: nothing seen yet → every passing key is new
             # (batch itself is already key-deduped by the groupBy above);
-            # `passing` is a filter over the checkpointed `annotated` —
-            # no second materialization needed
+            # `passing` is already materialized — no second checkpoint
             new, n_new = passing, n_pass
         else:
             obs_new = Observation()
@@ -421,8 +422,7 @@ class CrawlScheduler:
         self.n_seen += n_new
         self.pending_count += n_new
 
-        self.frontier_parts.append(
-            new.select(*[f.name for f in self._frontier_schema().fields]))
+        self.frontier_parts.append(new)
         if self.fast_clock:
             self.hp_parts.append(
                 new.groupBy("firstip").agg(F.count("*").alias("d")))
@@ -578,12 +578,14 @@ class CrawlScheduler:
                 | (F.col("_prior_owner").isNull() & (F.col("_earlier_q") > 0)))
         else:
             dup_cond = F.lit(False)
+        # a successful, indexed fetch: the only reply that harvests and
+        # counts toward the site quota; under respider it re-enters
+        ok_cond = ~err_cond & ~redir_cond & ~dup_cond
         obs_w = Observation()
         winners = (
             winners.observe(obs_w, F.count(F.lit(1)).alias("n"),
-                            F.sum((F.col("harvest_links") & ~err_cond
-                                   & ~redir_cond & ~dup_cond).cast("long")
-                                  ).alias("n_harvest"),
+                            F.sum((F.col("harvest_links") & ok_cond
+                                   ).cast("long")).alias("n_harvest"),
                             F.sum(err_cond.cast("long")).alias("n_err"),
                             F.sum(redir_cond.cast("long")).alias("n_redir"),
                             F.sum(dup_cond.cast("long")).alias("n_dup"))
@@ -605,7 +607,7 @@ class CrawlScheduler:
         # error slots consume politeness time but not quota)
         upd = winners.groupBy("firstip").agg(
             F.max(F.col("scheduled_time_ms") + F.col("gap_ms")).alias("next_ok_ms"),
-            F.sum((~err_cond & ~redir_cond & ~dup_cond).cast("long")).alias("c"))
+            F.sum(ok_cond.cast("long")).alias("c"))
         if self.cfg.site_quota:
             upd = (upd.join(self.host_state.select(
                        "firstip", F.col("n_emitted").alias("prev_n")),
@@ -639,43 +641,10 @@ class CrawlScheduler:
         if self.cfg.site_quota:
             m["quota_dropped"] = n_quota
 
+        n_err, n_redirected, n_dup = (int(wc[k] or 0) for k in
+                                      ("n_err", "n_redir", "n_dup"))
         if self.cfg.err_mod:
-            # oracle step 9 — error reply → retry re-entry: errorcount+1,
-            # filter row re-evaluated with the new count (hastmperror /
-            # errorcount>=N rules decide retry-vs-give-up), due_ms =
-            # spidered + retry backoff.  No harvest, no respider path.
-            m["errors"] = n_errors = int(wc["n_err"] or 0)
-            n_retried = 0
-            if n_errors:
-                er = (winners.where(err_cond)
-                      .withColumn("spidered_ms",
-                                  F.col("scheduled_time_ms") + F.lit(FETCH_MS))
-                      .withColumn("errorcount",
-                                  (F.coalesce(F.col("errorcount"), F.lit(0))
-                                   + 1).cast("int"))
-                      # a failed fetch was never indexed and carries no
-                      # change signal (sim step 9 evaluates without them)
-                      .withColumn("is_indexed", F.lit(False))
-                      .withColumn("percentchangedperday", F.lit(0))
-                      .withColumn("path", path_col(F.col("url")))
-                      .drop(*ASSIGN_FIELDS))
-                er = apply_url_filters(er, self.rules)
-                obs_e = Observation()
-                er = (er.where((F.col("priority") >= 0) & (~F.col("force_delete")))
-                      .withColumn("added_ms", F.col("spidered_ms"))
-                      .withColumn("due_ms", F.col("spidered_ms")
-                                  + F.lit(self.cfg.retry_wait_ms))
-                      .withColumn("gen", (F.col("gen") + 1).cast("int"))
-                      .observe(obs_e, F.count(F.lit(1)).alias("n"))
-                      .transform(self._ckpt))
-                n_retried = int(obs_e.get["n"] or 0)
-                if n_retried:
-                    self.frontier_parts.append(
-                        er.select(*[fld.name for fld in self._frontier_schema().fields]))
-                    self.pending_count += n_retried
-            m["retried"] = n_retried
-
-        n_redirected = int(wc["n_redir"] or 0) if self.redirects is not None else 0
+            m["errors"] = n_err
         if self.redirects is not None:
             m["redirected"] = n_redirected
 
@@ -683,84 +652,20 @@ class CrawlScheduler:
             # step 12 — register this round's first indexer per new hash
             # (winners is checkpointed → a cheap lazy projection)
             self.indexed_ch_parts.append(
-                winners.where((~err_cond) & (~redir_cond)
-                              & F.col("_prior_owner").isNull()
+                winners.where(ok_cond & F.col("_prior_owner").isNull()
                               & (F.col("_earlier_q") == 0))
                 .select("content_hash", F.col("urlhash48").alias("owner")))
-            m["dups"] = int(wc["n_dup"] or 0)
+            m["dups"] = n_dup
 
-        if self.cfg.respider and n_emitted:
-            # J1/W4 respider: every fetch writes an implicit SpiderReply
-            # (spidered_ms = slot end) and the URL RE-ENTERS the frontier
-            # at gen+1 with due = spidered_ms + spider_freq_days, where
-            # the filter row is RE-EVALUATED with is_indexed=true and the
-            # reply's percentchangedperday (Spider.cpp::scanSpiderdb
-            # request⋈latest-reply + getUrlFilterNum re-eval [U][H];
-            # change signal pinned to urlhash48 % 101 — deterministic,
-            # mirrored by the oracle sim).  Robots are NOT re-checked
-            # (pinned: robots gate at discovery only).
-            re_ = (winners.where(~err_cond & ~redir_cond & ~dup_cond)
-                   .withColumn("spidered_ms",
-                               F.col("scheduled_time_ms") + F.lit(FETCH_MS))
-                   .withColumn("is_indexed", F.lit(True)))
-            if self.content_gens is not None:
-                # steps 8'/13' — content-driven change signals: hash at
-                # THIS generation vs the previous one (two broadcast
-                # joins on the tiny winners set); changed → pct =
-                # min(100, 100·MS_PER_DAY DIV elapsed), unchanged or
-                # first download → 0
-                cur = self.content_gens.select(
-                    "url", "gen", F.col("_chg").alias("_ch_cur"))
-                prev = self.content_gens.select(
-                    "url", (F.col("gen") + 1).alias("gen"),
-                    F.col("_chg").alias("_ch_prev"))
-                re_ = (re_.join(F.broadcast(cur), ["url", "gen"], "left")
-                       .join(F.broadcast(prev), ["url", "gen"], "left"))
-                unchanged = (
-                    (F.col("gen") > 0)
-                    & (F.coalesce(F.col("_ch_cur"), F.col("urlhash48"))
-                       == F.coalesce(F.col("_ch_prev"), F.col("urlhash48"))))
-                pct = (F.when((F.col("gen") == 0) | unchanged, F.lit(0))
-                       .otherwise(F.least(F.lit(100), F.expr(
-                           f"(100 * CAST({MS_PER_DAY} AS BIGINT)) DIV"
-                           " greatest(spidered_ms - added_ms, 1)"))))
-            else:
-                # pinned deterministic signals (no content fixture)
-                unchanged = ((F.col("gen") > 0)
-                             & ((F.col("urlhash48") + F.col("gen")) % 3 == 0))
-                pct = (F.col("urlhash48") % 101)
-            re_ = (re_.withColumn("percentchangedperday", pct.cast("int"))
-                   .withColumn("errorcount", F.lit(0))
-                   .withColumn("path", path_col(F.col("url")))
-                   .drop(*ASSIGN_FIELDS))
-            re_ = apply_url_filters(re_, self.rules)
-            # step 13 — EDOCUNCHANGED backoff: an unchanged re-fetch
-            # doubles the carried interval multiplier (capped); change
-            # resets it to 1
-            if self.cfg.unchanged_backoff:
-                new_backoff = F.when(
-                    unchanged,
-                    F.least(F.col("backoff") * 2,
-                            F.lit(self.cfg.backoff_cap))).otherwise(F.lit(1))
-            else:
-                new_backoff = F.lit(1)
-            obs_r = Observation()
-            re_ = (re_.where((F.col("priority") >= 0) & (~F.col("force_delete")))
-                   .withColumn("backoff", new_backoff.cast("int"))
-                   .withColumn("added_ms", F.col("spidered_ms"))
-                   .withColumn("due_ms", F.col("spidered_ms")
-                               + (F.col("spider_freq_days")
-                                  * F.lit(float(MS_PER_DAY))).cast("long")
-                               * F.col("backoff"))
-                   .withColumn("gen", (F.col("gen") + 1).cast("int"))
-                   .observe(obs_r, F.count(F.lit(1)).alias("n"))
-                   .transform(self._ckpt))
-            n_re = int(obs_r.get["n"] or 0)
-            if n_re:
-                self.frontier_parts.append(
-                    re_.select(*[fld.name for fld in self._frontier_schema().fields]))
-                self.pending_count += n_re
-            m["respidered"] = n_re
+        # oracle steps 8/9/13 — no job when no reply would re-enter
+        n_re = n_re_err = 0
+        if n_err or (self.cfg.respider
+                     and n_emitted - n_err - n_redirected - n_dup):
+            n_re, n_re_err = self._reenter(winners, err_cond, ok_cond)
+        if self.cfg.err_mod:
+            m["retried"] = n_re_err
+        if self.cfg.respider:
+            m["respidered"] = n_re - n_re_err
 
         # skip the whole enqueue pipeline when no winner harvests links
         # (saves ~8 empty-DF jobs per round — most rounds in a drain);
@@ -770,8 +675,7 @@ class CrawlScheduler:
             batch = None
             if wc["n_harvest"]:
                 batch = (
-                    winners.where(F.col("harvest_links") & ~err_cond
-                                  & ~redir_cond & ~dup_cond)
+                    winners.where(F.col("harvest_links") & ok_cond)
                     .join(self.links, winners["url"] == self.links["src_url"])
                     .select(
                         F.col("dst_url").alias("url"),
@@ -838,6 +742,83 @@ class CrawlScheduler:
         if self.cfg.checkpoint_every and self.round % self.cfg.checkpoint_every == 0:
             self.checkpoint()
         return n_emitted
+
+    def _reenter(self, winners: DataFrame, err_cond, ok_cond) -> tuple[int, int]:
+        """Fetch-reply re-entry (oracle steps 8, 9, 13): each error reply,
+        and under respider each successful one, RE-ENTERS the frontier at
+        gen+1 with its filter row RE-EVALUATED against the reply
+        (Spider.cpp::scanSpiderdb request⋈latest-reply + getUrlFilterNum
+        [U][H]): an error with errorcount+1, due after the retry wait; a
+        success indexed, with its change signal, due after
+        spider_freq_days × backoff.  Robots are NOT re-checked (pinned:
+        robots gate at discovery only).  ``err_cond`` reads only urlhash48,
+        so it holds on every step.  Returns (re-entered, errors)."""
+        re_ = (winners.where(err_cond | ok_cond if self.cfg.respider else err_cond)
+               .withColumn("spidered_ms",
+                           F.col("scheduled_time_ms") + F.lit(FETCH_MS)))
+        if self.content_gens is not None:
+            # steps 8'/13' — content-driven change signals: hash at
+            # THIS generation vs the previous one (two broadcast joins
+            # on the tiny winners set); changed → pct =
+            # min(100, 100·MS_PER_DAY DIV elapsed), unchanged or first
+            # download → 0
+            cur = self.content_gens.select(
+                "url", "gen", F.col("_chg").alias("_ch_cur"))
+            prev = self.content_gens.select(
+                "url", (F.col("gen") + 1).alias("gen"),
+                F.col("_chg").alias("_ch_prev"))
+            re_ = (re_.join(F.broadcast(cur), ["url", "gen"], "left")
+                   .join(F.broadcast(prev), ["url", "gen"], "left"))
+            unchanged = (
+                (F.col("gen") > 0)
+                & (F.coalesce(F.col("_ch_cur"), F.col("urlhash48"))
+                   == F.coalesce(F.col("_ch_prev"), F.col("urlhash48"))))
+            pct = (F.when((F.col("gen") == 0) | unchanged, F.lit(0))
+                   .otherwise(F.least(F.lit(100), F.expr(
+                       f"(100 * CAST({MS_PER_DAY} AS BIGINT)) DIV"
+                       " greatest(spidered_ms - added_ms, 1)"))))
+        else:
+            # pinned deterministic signals (no content fixture)
+            unchanged = ((F.col("gen") > 0)
+                         & ((F.col("urlhash48") + F.col("gen")) % 3 == 0))
+            pct = (F.col("urlhash48") % 101)
+        re_ = (re_.withColumn("errorcount", F.when(
+                   err_cond, F.coalesce(F.col("errorcount"), F.lit(0)) + 1)
+                   .otherwise(F.lit(0)).cast("int"))
+               .withColumn("is_indexed", ~err_cond)
+               .withColumn("percentchangedperday",
+                           F.when(err_cond, F.lit(0)).otherwise(pct).cast("int"))
+               .withColumn("path", path_col(F.col("url")))
+               .drop(*ASSIGN_FIELDS))
+        re_ = apply_url_filters(re_, self.rules)
+        # step 13 — EDOCUNCHANGED backoff: an unchanged re-fetch doubles
+        # the carried interval multiplier (capped), a change resets it
+        # to 1; errors never touch it
+        new_backoff = F.when(err_cond, F.col("backoff"))
+        if self.cfg.unchanged_backoff:
+            new_backoff = new_backoff.when(
+                unchanged, F.least(F.col("backoff") * 2,
+                                   F.lit(self.cfg.backoff_cap)))
+        new_backoff = new_backoff.otherwise(F.lit(1))
+        obs = Observation()
+        re_ = (re_.where((F.col("priority") >= 0) & (~F.col("force_delete")))
+               .withColumn("backoff", new_backoff.cast("int"))
+               .withColumn("added_ms", F.col("spidered_ms"))
+               .withColumn("due_ms", F.col("spidered_ms") + F.when(
+                   err_cond, F.lit(self.cfg.retry_wait_ms).cast("long"))
+                   .otherwise((F.col("spider_freq_days")
+                               * F.lit(float(MS_PER_DAY))).cast("long")
+                              * F.col("backoff")))
+               .withColumn("gen", (F.col("gen") + 1).cast("int"))
+               .observe(obs, F.count(F.lit(1)).alias("n"),
+                        F.sum(err_cond.cast("long")).alias("n_err"))
+               .transform(self._ckpt))
+        n, n_err = int(obs.get["n"] or 0), int(obs.get["n_err"] or 0)
+        if n:
+            self.frontier_parts.append(
+                re_.select(*[fld.name for fld in self._frontier_schema().fields]))
+            self.pending_count += n
+        return n, n_err
 
     def run(self, max_rounds: int = 1_000_000, seeds: DataFrame | None = None) -> DataFrame:
         if seeds is not None:

@@ -92,9 +92,9 @@ def group_rules(prepped: DataFrame) -> DataFrame:
         .alias("_rules"))
 
 
-def eval_allowed(urls: DataFrame, prepped: DataFrame,
-                 grouped: DataFrame | None = None) -> DataFrame:
-    """Attach ``robots_allowed`` to a DF with (host, path, urlhash48).
+def eval_allowed(urls: DataFrame, grouped: DataFrame) -> DataFrame:
+    """Attach ``robots_allowed`` to a DF with (host, path, urlhash48);
+    ``grouped`` is ``group_rules(prep_rules(robots))``.
 
     Shuffle-free: the rule table is grouped to ONE row per host (rules as
     a struct array), broadcast, left-joined, and longest-match precedence
@@ -102,8 +102,7 @@ def eval_allowed(urls: DataFrame, prepped: DataFrame,
     the whole evaluation stays map-side whatever the frontier size (the
     100 TB plan: no per-URL shuffle, no window).
     """
-    per_host = grouped if grouped is not None else group_rules(prepped)
-    r = F.broadcast(per_host.withColumnRenamed("host", "r_host"))
+    r = F.broadcast(grouped.withColumnRenamed("host", "r_host"))
     joined = urls.join(r, urls["host"] == r["r_host"], "left")
     matched = F.filter(
         F.col("_rules"), lambda x: F.rlike(F.col("path"), x["pattern_regex"]))

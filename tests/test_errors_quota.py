@@ -165,6 +165,15 @@ def test_respider_with_errors_matches_oracle(spark, err_dir):
             assert g == w, f"divergence at seq={w[0]}: spark={g} oracle={w}"
         assert sum(m.get("errors", 0) for m in sim.metrics) > 0
         assert sum(m.get("respidered", 0) for m in sim.metrics) > 0
+        # per-round metrics: every key the oracle emits except the raw
+        # pre-dedup `candidates` count, which the scheduler does not take
+        assert len(sched.metrics) == len(sim.metrics)
+        for got_m, want_m in zip(sched.metrics, sim.metrics):
+            want_m = {k: v for k, v in want_m.items() if k != "candidates"}
+            assert {k: got_m.get(k) for k in want_m} == want_m, \
+                f"round {want_m['round']}"
+        # both re-entry kinds came out of the same round at least once
+        assert any(m["retried"] and m["respidered"] for m in sim.metrics)
     finally:
         _write_rules(err_dir, ERROR_FILTERS)  # restore for other tests
 

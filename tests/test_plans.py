@@ -198,3 +198,18 @@ def test_round_plan_rank_limit_below_shuffle(spark, tiny_dir):
     assert set(wgl) == {"Partial", "Final"}, plan[:3000]
     assert wgl["Final"] < shuffle < wgl["Partial"], plan[:3000]
     assert df.count() > 0
+
+
+def test_seed_frontier_stores_passing_rows_only(spark, micro_dir):
+    """The seed enqueue checkpoints only the rows that pass filters,
+    tombstones and robots: the frontier plan carries no disposition
+    column or filter for every winner scan to re-read."""
+    from tests.conftest import load_fixtures
+
+    from gigaspark.operators.frontier import CrawlScheduler
+
+    sched = CrawlScheduler(spark, load_fixtures(spark, micro_dir))
+    m = sched.seed(spark.read.parquet(f"{micro_dir}/seeds.parquet"))
+    plan = sched.frontier._jdf.queryExecution().optimizedPlan().toString()
+    assert "_disposition" not in plan, plan[:2000]
+    assert sched.frontier.count() == m["accepted"] > 0

@@ -2,7 +2,8 @@
 
 import pyspark.sql.functions as F
 
-from gigaspark.operators.robots import RobotsOracle, eval_allowed, host_delays, prep_rules
+from gigaspark.operators.robots import (RobotsOracle, eval_allowed, group_rules,
+                                        host_delays, prep_rules)
 from gigaspark.xxh import urlhash48
 
 RULES = [
@@ -35,7 +36,7 @@ def test_spark_matches_oracle(spark):
     urls = spark.createDataFrame(
         [dict(host=h, path=p, urlhash48=urlhash48(h + p)) for h, p in PATHS])
     got = {(r["host"], r["path"]): r["robots_allowed"]
-           for r in eval_allowed(urls, rules_df).collect()}
+           for r in eval_allowed(urls, group_rules(rules_df)).collect()}
     for h, p in PATHS:
         assert got[(h, p)] == oracle.allowed(h, p), (h, p)
     # pinned semantics spot checks
